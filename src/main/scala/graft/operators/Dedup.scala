@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.streaming.StreamRunner
 
 /** Deduplication operators for large-scale corpus curation. The reference
   * engine has no dedup operator (distinct is a group-by with the value
@@ -58,9 +59,10 @@ object Dedup {
   }
 
   /** Exact dedup by content fingerprint: one row per distinct key with the
-    * kept (min) id and the duplicate count. Groups by the 16-byte md5 of
-    * the key, NOT the key itself: map-side partial aggregation collapses
-    * duplicates before the exchange, but on a mostly-unique corpus every
+    * kept (min) id and the duplicate count. `key` must be a string or
+    * binary column — `md5` accepts nothing else. Groups by the 16-byte
+    * md5 of the key, NOT the key itself: map-side partial aggregation
+    * collapses duplicates before the exchange, but on a mostly-unique corpus every
     * DISTINCT document still travels — the grouping key IS the shuffle
     * payload, and at 100 TB that is the operator's entire byte cost
     * (guide §2.3: shuffle keys and metadata instead of payloads). The
@@ -71,7 +73,10 @@ object Dedup {
     * undetected-error rates of the hardware the shuffle crosses. A
     * 64-bit hash would NOT be safe (~50% collision odds at ~5e9 keys);
     * this is the same 128-bit choice [[persistExactIndex]] has always
-    * persisted, now applied to the one-shot operator. A null key
+    * persisted, now applied to the one-shot operator. The bound covers
+    * accidental collisions only: MD5 chosen-prefix collisions can be
+    * constructed on purpose, so documents an adversary writes can make
+    * two different keys group as one. A null key
     * fingerprints to null and still groups as the single null-key group,
     * exactly as the raw key did.
     */
@@ -133,12 +138,6 @@ object Dedup {
     materialize(verified, withSets, banded)
   }
 
-  /** The candidate stage of [[lshVerifiedPairs]], exposed for the scale
-    * soak (graft.Soak): returns (persisted shingle sets, persisted band
-    * keys, candidate pairs after the super-bucket cap and ≥2-band filter)
-    * so candidate-set growth can be measured against corpus size without
-    * paying for verification. Callers must unpersist the first two.
-    */
   /** The shingle-set and band-key frames shared by the self-join LSH, the
     * cross-corpus LSH, and the streaming ingest dedup: (persisted
     * (id, ws) sets, persisted (id, band, bkey) scalars). Callers own the
@@ -205,8 +204,8 @@ object Dedup {
   /** N-gram (word shingle) jaccard near-dup pairs — order-sensitive variant.
     * Same LSH pruning as [[minhashPairs]], verified with exact shingle
     * jaccard.
-    */
-  /** r=2 geometry (not r=4): the 0.5 threshold needs per-band collision
+    *
+    * r=2 geometry (not r=4): the 0.5 threshold needs per-band collision
     * p=j² ≈ 0.25 at the margin; with b=48 the miss probability at j=0.5 is
     * (1-0.25)⁴⁸ ≈ 1e-6. The 3-gram shingle space is sparse enough that
     * background pairs stay rare even at r=2.
@@ -257,15 +256,9 @@ object Dedup {
     * demands the full match), the CORPUS side — the side that dwarfs
     * every arriving batch at 100 TB — re-shuffles in neither.
     * Session-survivable, unlike the in-memory index's executor-pinned
-    * caches.
-    */
-  /** Bucket-count choice: an explicit `numBuckets` wins; otherwise an
-    * `advisor` applies the Lachesis sizing rule
-    * ([[graft.advisor.PlacementAdvisor.recommendBuckets]] — power-of-two
-    * count keeping each bucket near `targetRowsPerBucket` rows, sized
-    * from the band set, the index's larger side) so standing indexes
-    * inherit the placement layer's decision automatically; with neither,
-    * the session's shuffle-partition count (the pre-round-8 behavior).
+    * caches. Both sets share one bucket count
+    * ([[IndexLifecycle.bucketCount]]), sized from the band set, the
+    * index's larger side.
     */
   def persistLshIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -274,20 +267,12 @@ object Dedup {
       maxBucket: Int = 200, numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
       targetRowsPerBucket: Long = 1L << 22): Unit = {
-    val spark = corpus.sparkSession
     val (cSets, cBanded) =
       corpusLshIndex(corpus, idCol, textCol, k, bands, shingleN, maxBucket)
-    // no-advisor default sizes from the data too (bucketCountFor — the
-    // advisor's rule without the co-partition-group history): the old
-    // session-shuffle-partition fallback stamped a local-core-count
-    // constant into the stored layout. cBanded is persisted and already
-    // materialized, so the count is a cached-frame pass either way.
-    val n = if (numBuckets > 0) numBuckets
-      else advisor
-        .map(_.recommendBuckets(s"$db.${name}_bands", cBanded.count(),
-          targetRowsPerBucket))
-        .getOrElse(graft.advisor.PlacementAdvisor
-          .bucketCountFor(cBanded.count(), targetRowsPerBucket))
+    // cBanded is persisted and already materialized, so the count is a
+    // cached-frame pass
+    val n = IndexLifecycle.bucketCount(numBuckets, advisor,
+      s"$db.${name}_bands", cBanded.count(), targetRowsPerBucket)
     catalog.createBucketedSet(db, s"${name}_sets", cSets, "id", n)
     catalog.createBucketedSet(db, s"${name}_bands", cBanded,
       Seq("band", "bkey"), n)
@@ -501,8 +486,8 @@ object Dedup {
     // recap policy re-fires, which a conf change can prevent forever).
     // Cost on the overwhelmingly common clean path: one marker
     // Files.exists plus two staging-sidecar existence checks.
-    catalog.recoverSwapGroup(db, Seq(s"${setsName}_recap" -> setsName,
-      s"${bandsName}_recap" -> bandsName))
+    catalog.recoverSwapGroup(db,
+      IndexLifecycle.stagedPairs("_recap", Seq(setsName, bandsName)))
     val (nSets, nBanded) = bandFrames(batch, idCol,
       wordShingles(col(textCol), shingleN), k, bands)
     val exists = catalog.meta(db, bandsName).nonEmpty
@@ -708,62 +693,36 @@ object Dedup {
       maxBucket: Int = 200): Unit = {
     val setsName = s"${name}_sets"
     val bandsName = s"${name}_bands"
-    val pairs = Seq(s"${setsName}_recap" -> setsName,
-      s"${bandsName}_recap" -> bandsName)
-    catalog.recoverSwapGroup(db, pairs)
-    val setsMeta = catalog.meta(db, setsName).getOrElse(
-      throw new IllegalArgumentException(
-        s"recapIngestNearDupIndex: no ingest index $db.$name"))
-    val hot = catalog.scanSet(db, bandsName)
-      .groupBy(col("band"), col("bkey"))
-      .agg(count_distinct(col("id")).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"), col("bkey"))
-    val capped = catalog.scanSet(db, bandsName)
-      .join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-      .distinct()
-    // stage the new generation (reads run against the still-live old
-    // directories; createSet writes to the separate *_recap paths)
-    catalog.createSet(db, s"${setsName}_recap",
-      catalog.scanSet(db, setsName),
-      partitionColumn = setsMeta.partitionColumn)
-    catalog.markStaging(db, s"${setsName}_recap")
-    catalog.createSet(db, s"${bandsName}_recap", capped,
-      partitionColumn = catalog.meta(db, bandsName).flatMap(_.partitionColumn))
-    catalog.markStaging(db, s"${bandsName}_recap")
-    catalog.swapSetGroup(db, pairs)
-    stampIngestCensusRows(catalog, db, name)
-  }
-
-  /** Record "rows the band set held when its census was last known
-    * clean" — the ANN tiers' `_built` sidecar pattern applied to the
-    * recap policy, so [[ingestGrowthFraction]] is two O(1) sidecar
-    * reads, never a scan.
-    */
-  private def stampIngestCensusRows(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Unit = {
-    val spark = catalog.scanSet(db, s"${name}_bands").sparkSession
-    import spark.implicits._
-    val rows = catalog.meta(db, s"${name}_bands").map(_.rows).getOrElse(0L)
-    catalog.createSet(db, s"${name}_censused",
-      Seq(rows).toDF("rows_at_census"), policy = "none")
+    IndexLifecycle.restage(catalog, db, "_recap", Seq(setsName, bandsName),
+        IndexLifecycle.censusMark(name)) {
+      val setsMeta = catalog.meta(db, setsName).getOrElse(
+        throw new IllegalArgumentException(
+          s"recapIngestNearDupIndex: no ingest index $db.$name"))
+      val hot = ingestBandCensus(catalog, db, name)
+        .filter(col("bucket_n") > maxBucket)
+        .select(col("band"), col("bkey"))
+      val capped = catalog.scanSet(db, bandsName)
+        .join(broadcast(hot), Seq("band", "bkey"), "left_anti")
+        .distinct()
+      // reads run against the still-live old directories; the staged
+      // generation lands in the separate *_recap paths
+      Seq(
+        catalog.createSet(db, _, catalog.scanSet(db, setsName),
+          partitionColumn = setsMeta.partitionColumn),
+        catalog.createSet(db, _, capped, partitionColumn =
+          catalog.meta(db, bandsName).flatMap(_.partitionColumn)))
+    }
   }
 
   /** Fraction the standing band set has GROWN since its census was last
-    * known clean ((rows_now − rows_then)/rows_then) — two sidecar
-    * reads, O(1). 0.0 for indexes grown before the marker existed (they
-    * opt in at their first census/recap), ∞-ish growth reads large.
+    * known clean ((rows_now − rows_then)/rows_then, the `<name>_censused`
+    * mark [[IndexLifecycle.censusMark]]) — two sidecar reads, O(1). 0.0
+    * for indexes grown before the mark existed (they opt in at their
+    * first census/recap), ∞-ish growth reads large.
     */
   def ingestGrowthFraction(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Double = {
-    val now = catalog.meta(db, s"${name}_bands").map(_.rows).getOrElse(0L)
-    if (catalog.meta(db, s"${name}_censused").isEmpty) 0.0
-    else {
-      val base = catalog.scanSet(db, s"${name}_censused")
-        .collect()(0).getLong(0)
-      if (base <= 0) 0.0 else (now - base).toDouble / base
-    }
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Double =
+    IndexLifecycle.growthSinceMark(catalog, db, IndexLifecycle.censusMark(name))
 
   /** The recap POLICY — "recap on census, not on a timer", as code: a
     * census is itself a full band-set scan, so it runs only once the
@@ -791,7 +750,7 @@ object Dedup {
         recapIngestNearDupIndex(catalog, db, name, maxBucket)
         true
       } else {
-        stampIngestCensusRows(catalog, db, name)
+        IndexLifecycle.markRows(catalog, db, IndexLifecycle.censusMark(name))
         false
       }
     }
@@ -810,7 +769,7 @@ object Dedup {
       stream: DataFrame, perBatch: DataFrame => DataFrame,
       sink: Option[(graft.storage.SetCatalog, String, String)]): DataFrame = {
     val (q, result) = startProbe(stream, perBatch, sink)
-    try q.processAllAvailable() finally q.stop()
+    StreamRunner.drain(q)
     result()
   }
 
@@ -836,19 +795,15 @@ object Dedup {
         cat.createSet(db, set, emptyOut, policy = "none")
     }
     var acc: Option[DataFrame] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val out = perBatch(batch.toDF())
-        sink match {
-          case Some((cat, db, set)) => cat.appendToSet(db, set, out)
-          case None =>
-            acc = Some(acc.map(_.unionByName(out)).getOrElse(out)
-              .localCheckpoint(eager = true))
-        }
-        ()
+    val q = StreamRunner.startEachBatch(stream) { batch =>
+      val out = perBatch(batch)
+      sink match {
+        case Some((cat, db, set)) => cat.appendToSet(db, set, out)
+        case None =>
+          acc = Some(acc.map(_.unionByName(out)).getOrElse(out)
+            .localCheckpoint(eager = true))
       }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
+    }
     (q, () => sink match {
       case Some((cat, db, set)) => cat.scanSet(db, set)
       case None => acc.getOrElse(
@@ -1178,11 +1133,6 @@ object Dedup {
     materialize(out, withSig)
   }
 
-  /** Embedding cosine near-dup pairs. Brute-force all-pairs baseline —
-    * correct at any scale but O(n²); the scale path is
-    * [[cosineLshPairs]] (hyperplane LSH) or
-    * [[SimilaritySearch.ivfTopK]]-style bucketing.
-    */
   /** Duplicate k-gram SPANS — substring-level exact dedup (the
     * "deduplicate repeated passages, not documents" family, here as
     * hashed k-token windows rather than a suffix array): a window of `k`
@@ -1236,38 +1186,36 @@ object Dedup {
     * join key (zero exchange), the arrival side shuffles only its
     * 16-byte fingerprints. Per-doc results depend only on that doc and
     * the static index, so per-batch outputs union to the one-shot
-    * result.
-    */
-  /** Same bucket-count choice as [[persistLshIndex]]: explicit wins,
-    * then the advisor's sizing rule over the distinct-gram count, then
-    * the session shuffle-partition default. The gram frame persists
-    * around the advisor's count so the fingerprint pipeline runs once.
+    * result. Buckets are sized from the distinct-gram count
+    * ([[persistKeyIndex]]).
     */
   def persistGramIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       corpus: DataFrame, idCol: String, textCol: String,
       k: Int = 8, numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
-      targetRowsPerBucket: Long = 1L << 22): Unit = {
-    val grams = windowFingerprints(corpus, idCol, textCol, k)
-      .select(col("g")).distinct()
-    // both auto paths persist + count so the fingerprint pipeline runs
-    // once; the no-advisor default sizes from that count instead of the
-    // session's shuffle-partition constant (see bucketCountFor)
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        grams.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_grams", grams.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(grams.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_grams", grams, "g", n)
-    if (numBuckets == 0) grams.unpersist(blocking = false)
+      targetRowsPerBucket: Long = 1L << 22): Unit =
+    persistKeyIndex(catalog, db, s"${name}_grams",
+      windowFingerprints(corpus, idCol, textCol, k).select(col("g")).distinct(),
+      "g", numBuckets, advisor, targetRowsPerBucket)
+
+  /** Write a distinct-key standing index set bucketed on `key`, so every
+    * later arrival batch probes it with zero index-side exchange. The
+    * bucket count is [[IndexLifecycle.bucketCount]] over the key count;
+    * on the auto paths `keys` is persisted around that count so the key
+    * pipeline runs once.
+    */
+  private def persistKeyIndex(
+      catalog: graft.storage.SetCatalog, db: String, set: String,
+      keys: DataFrame, key: String, numBuckets: Int,
+      advisor: Option[graft.advisor.PlacementAdvisor],
+      targetRowsPerBucket: Long): Unit = {
+    val auto = numBuckets <= 0
+    if (auto) keys.persist()
+    catalog.createBucketedSet(db, set, keys, key,
+      IndexLifecycle.bucketCount(numBuckets, advisor, s"$db.$set",
+        keys.count(), targetRowsPerBucket))
+    if (auto) keys.unpersist(blocking = false)
   }
 
   /** Persist an exact-content fingerprint index: one row per DISTINCT
@@ -1276,34 +1224,17 @@ object Dedup {
     * The EXACT-match analogue of [[persistLshIndex]] — the cheapest
     * standing dedup structure a 100 TB ingest keeps warm (128-bit
     * fingerprints: collision odds are negligible at any corpus size,
-    * unlike a 64-bit hash's birthday bound). Bucket-count choice matches
-    * the other index builders: explicit, else advisor, else session
-    * default.
+    * unlike a 64-bit hash's birthday bound).
     */
   def persistExactIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       corpus: DataFrame, textCol: String, numBuckets: Int = 0,
       advisor: Option[graft.advisor.PlacementAdvisor] = None,
-      targetRowsPerBucket: Long = 1L << 22): Unit = {
-    val hashes = corpus.filter(col(textCol).isNotNull)
-      .select(unhex(md5(col(textCol))).as("h")).distinct()
-    // same auto-sizing shape as persistGramIndex: persist + count once,
-    // size buckets from the data with or without an advisor
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        hashes.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_hashes", hashes.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(hashes.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_hashes", hashes, "h", n)
-    if (numBuckets == 0) hashes.unpersist(blocking = false)
-  }
+      targetRowsPerBucket: Long = 1L << 22): Unit =
+    persistKeyIndex(catalog, db, s"${name}_hashes",
+      corpus.filter(col(textCol).isNotNull)
+        .select(unhex(md5(col(textCol))).as("h")).distinct(),
+      "h", numBuckets, advisor, targetRowsPerBucket)
 
   /** Every arriving doc annotated with whether its EXACT content already
     * exists in the stored index: (idCol, is_dup). The keep-side filter
@@ -1380,9 +1311,7 @@ object Dedup {
     * engine-computed long (the 63-bit audio envelope fp) rather than an
     * md5 of the bytes. One row per DISTINCT fingerprint, bucketed on it,
     * so later arrival batches probe with zero index-side exchange; an
-    * 8-byte key shuffles even lighter than the 16-byte md5. Same
-    * bucket-count policy as the other index builders: explicit, else
-    * advisor, else session default.
+    * 8-byte key shuffles even lighter than the 16-byte md5.
     */
   def persistFingerprintIndex(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -1393,24 +1322,9 @@ object Dedup {
         org.apache.spark.sql.types.LongType,
       s"fingerprint column $fpCol is ${fps.schema(fpCol).dataType}; " +
         "persistFingerprintIndex stores LONG fingerprints")
-    val distinct = fps.filter(col(fpCol).isNotNull)
-      .select(col(fpCol).as("fp")).distinct()
-    // same auto-sizing shape as persistGramIndex: persist + count once,
-    // size buckets from the data with or without an advisor
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        distinct.persist()
-        advisor match {
-          case Some(a) =>
-            a.recommendBuckets(s"$db.${name}_fps", distinct.count(),
-              targetRowsPerBucket)
-          case None =>
-            graft.advisor.PlacementAdvisor
-              .bucketCountFor(distinct.count(), targetRowsPerBucket)
-        }
-      }
-    catalog.createBucketedSet(db, s"${name}_fps", distinct, "fp", n)
-    if (numBuckets == 0) distinct.unpersist(blocking = false)
+    persistKeyIndex(catalog, db, s"${name}_fps",
+      fps.filter(col(fpCol).isNotNull).select(col(fpCol).as("fp")).distinct(),
+      "fp", numBuckets, advisor, targetRowsPerBucket)
   }
 
   /** Scan a [[persistFingerprintIndex]] set, failing FAST on a non-long
@@ -1875,7 +1789,12 @@ object Dedup {
     * front of it. At default knobs the recommendation equals the
     * static sizing exactly (AdvisorSpec pins it; SEMDEDUP_SCALE
     * carries the measured parity row), so this is the same engine with
-    * a memory, not a second regime.
+    * a memory, not a second regime. The recommendation's `routeCells`
+    * is NOT forwarded: `semanticPairs` picks the assignment kernel from
+    * k exactly as the static path does (flat up to [[routeThreshold]],
+    * [[SimilaritySearch.routedNearestUdf]] above it), where a forwarded
+    * cell count would force the two-level router even past the tree
+    * threshold.
     */
   def semanticPairsAdvised(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -1887,21 +1806,9 @@ object Dedup {
     semanticPairs(mat, idCol, vecCol,
       nClusters = g.clusters, iters = iters, threshold = threshold,
       targetClusterSize = g.targetClusterSize,
-      routeCells = g.routeCells, routeIters = routeIters)
+      routeCells = 0, routeIters = routeIters)
   }
 
-  /** Brute-force cosine near-dup pairs — the EXACT regime of a
-    * two-regime design whose scale path is [[cosineLshPairs]] (lexical
-    * family: [[minHashLshPairs]]; paraphrase family: [[semanticPairs]]).
-    * The plan is a deliberate O(n²) cross join, correct and fine for
-    * oracle fixtures and re-rank pools; `maxRows` is the loud size gate
-    * (mirroring `BlockMatrix.inverse`'s `maxN`) that refuses to silently
-    * attempt an n² plan on a corpus-sized input — at the default bound
-    * the pair count already reaches ~5×10⁹. The gate's count runs over
-    * an eagerly-materialized frame, so the (often derived) embedding
-    * input is evaluated once, not once for the count and once for the
-    * pair scan.
-    */
   /** Persist a standing SEMANTIC index over a corpus: the SemDeDup
     * codebook (sized by [[autoClusters]] unless pinned) trained once,
     * plus the assigned corpus vectors partitioned one directory per
@@ -1978,17 +1885,10 @@ object Dedup {
   def streamAppendToSemanticIndex(
       stream: DataFrame, catalog: graft.storage.SetCatalog,
       db: String, name: String, idCol: String, vecCol: String,
-      rebuildIfDrifted: Boolean = false, driftFraction: Double = 0.5): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToSemanticIndex(catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      rebuildIfDrifted: Boolean = false, driftFraction: Double = 0.5): Unit =
+    StreamRunner.drainEachBatch(stream)(batch =>
+      appendToSemanticIndex(catalog, db, name, batch, idCol, vecCol,
+        rebuildIfDrifted, driftFraction))
 
   /** Fraction of the semantic index appended since its codebook was
     * trained — two sidecar reads, O(1), the ANN tiers' drift dial
@@ -2019,8 +1919,7 @@ object Dedup {
     val rows = catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(
       throw new IllegalArgumentException(
         s"rebuildSemanticIndex: no semantic index $db.$name"))
-    val spark = catalog.scanSet(db, s"${name}_vectors").sparkSession
-    SimilaritySearch.rebuildIvfIndex(spark, catalog, db, name, iters,
+    SimilaritySearch.rebuildIvfIndex(catalog.spark, catalog, db, name, iters,
       nCentroids0 = autoClusters(rows, targetClusterSize))
   }
 
@@ -2134,35 +2033,30 @@ object Dedup {
   private[graft] def semanticProbeFnCounted(
       catalog: graft.storage.SetCatalog, db: String, name: String,
       idCol: String, vecCol: String, threshold: Double)
-      : (DataFrame => DataFrame, () => Int) = {
-    // Generation-cached codebook: the centroid collect is O(k·d) driver
-    // bytes (~100 MB at a 200k-cell semantic codebook) — paid per
-    // micro-batch it would dwarf small batches, and APPENDS never
-    // change the codebook. The centroids sidecar stamp is the
-    // generation witness (every create/swap/tag rewrite touches it), so
-    // the collect re-runs exactly when a rebuild swapped a new
-    // generation in; the VECTORS plan still re-resolves every batch —
-    // that is where appends land.
-    var cached: Option[(Long, Array[Array[Double]], Int)] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val stamp = catalog.metaStamp(db, s"${name}_centroids")
-      val (centroids, routeT) = cached match {
-        case Some((s0, c, t0)) if s0 == stamp && stamp != 0L => (c, t0)
-        case _ =>
-          val ct = SimilaritySearch
-            .loadCentroidsWithThreshold(batch.sparkSession, catalog, db, name)
-          cached = Some((stamp, ct._1, ct._2))
-          loadCount += 1
-          ct
-      }
-      val vectors = catalog.scanSet(db, s"${name}_vectors")
-      semanticBatchPairs(batch, centroids, vectors, idCol, vecCol, threshold,
-        routeThreshold = Some(routeT))
+      : (DataFrame => DataFrame, () => Int) =
+    // the centroid collect is O(k·d) driver bytes (~100 MB at a
+    // 200k-cell semantic codebook) — paid per micro-batch it would dwarf
+    // small batches, and APPENDS never change the codebook
+    IndexLifecycle.generationCached(catalog, db, Seq(s"${name}_centroids"),
+      SimilaritySearch.loadCentroidsWithThreshold(_, catalog, db, name)) {
+      case (batch, (centroids, routeT)) =>
+        semanticBatchPairs(batch, centroids,
+          catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold,
+          routeThreshold = Some(routeT))
     }
-    (fn, () => loadCount)
-  }
 
+  /** Brute-force cosine near-dup pairs — the EXACT regime of a
+    * two-regime design whose scale path is [[cosineLshPairs]] (lexical
+    * family: [[minHashLshPairs]]; paraphrase family: [[semanticPairs]]).
+    * The plan is a deliberate O(n²) cross join, correct and fine for
+    * oracle fixtures and re-rank pools; `maxRows` is the loud size gate
+    * (mirroring `BlockMatrix.inverse`'s `maxN`) that refuses to silently
+    * attempt an n² plan on a corpus-sized input — at the default bound
+    * the pair count already reaches ~5×10⁹. The gate's count runs over
+    * an eagerly-materialized frame, so the (often derived) embedding
+    * input is evaluated once, not once for the count and once for the
+    * pair scan.
+    */
   def cosinePairs(
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxRows: Long = 100000L): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions._
+import graft.streaming.StreamRunner
 
 /** Approximate-nearest-neighbor search over an embedding column.
   * Brute-force cosine top-k is the exact baseline (O(q·n), fine when the
@@ -934,25 +935,46 @@ object SimilaritySearch {
     // whole corpus (ADVICE r17 / VERDICT r18 next #4)
     val centroids = indexTrainCentroids(spark, emb, nCentroids, iters,
       idCol, vecCol, knownRowCount)
+    writeCentroids(spark, catalog, db, s"${name}_centroids", centroids,
+      routeMarker = true)
+    writeCellVectors(spark, catalog, db, s"${name}_vectors",
+      vectorsWithNorm(emb, idCol, vecCol), centroids)
+    IndexLifecycle.markRows(catalog, db, IndexLifecycle.builtMark(name))
+  }
+
+  /** A `<name>_centroids` model set: one (bucket, centroid) row per
+    * cell. IVF and semantic codebooks carry the `route_threshold_N`
+    * marker ([[withRouteThreshold]]); IVF-PQ's carry none, because its
+    * assignment is the flat [[nearestUdf]] at every size.
+    */
+  private def writeCentroids(
+      spark: SparkSession, catalog: graft.storage.SetCatalog, db: String,
+      set: String, centroids: Array[Array[Double]],
+      routeMarker: Boolean): Unit = {
     import spark.implicits._
-    catalog.createSet(db, s"${name}_centroids",
-      withRouteThreshold(spark,
-        centroids.zipWithIndex
-          .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-          .toDF("bucket", "centroid")),
+    val df = centroids.zipWithIndex
+      .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
+      .toDF("bucket", "centroid")
+    catalog.createSet(db, set,
+      if (routeMarker) withRouteThreshold(spark, df) else df,
       policy = "none")
-    // routed above the threshold (semantic-scale codebooks) — the SAME
-    // rule every later append/probe derives FROM THE PERSISTED MARKER,
-    // so assignments never mix even across sessions with different
-    // conf; grouped directories above the fanout bound, likewise
-    // schema-witnessed
+  }
+
+  /** Assign (neighbor_id, n_vec, n_nrm) rows to their cells and write
+    * them cell-partitioned — the IVF/semantic build and rebuild. Routed
+    * above the session threshold (semantic-scale codebooks), the SAME
+    * rule every later append/probe derives FROM THE PERSISTED MARKER, so
+    * assignments never mix even across sessions with different conf;
+    * grouped directories above the fanout bound, likewise
+    * schema-witnessed.
+    */
+  private def writeCellVectors(
+      spark: SparkSession, catalog: graft.storage.SetCatalog, db: String,
+      set: String, vecs: DataFrame, centroids: Array[Array[Double]]): Unit = {
     val assign = indexAssignUdf(spark, centroids)
     val (partCol, laidOut) = cellLayout(spark,
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm"), assign(col(vecCol)).as("bucket")),
-      centroids.length)
-    catalog.createPartitionedSet(db, s"${name}_vectors", laidOut, partCol)
-    persistBuiltRows(spark, catalog, db, name)
+      vecs.withColumn("bucket", assign(col("n_vec"))), centroids.length)
+    catalog.createPartitionedSet(db, set, laidOut, partCol)
   }
 
   /** Incrementally extend a persisted IVF index: assign the NEW vectors
@@ -988,12 +1010,10 @@ object SimilaritySearch {
     // column names, atomic with the data
     val assign = indexAssignUdfFor(threshold, centroids)
     val standing = catalog.scanSet(db, s"${name}_vectors")
-    val partCol = cellGroupColOf(standing).map(_._1).getOrElse("bucket")
     catalog.appendToPartitionedSet(db, s"${name}_vectors",
-      withCellGroup(standing,
-        newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-          l2Norm(col(vecCol)).as("n_nrm"), assign(col(vecCol)).as("bucket"))),
-      partCol)
+      withCellGroup(standing, vectorsWithNorm(newEmb, idCol, vecCol)
+        .withColumn("bucket", assign(col("n_vec")))),
+      cellGroupColOf(standing).map(_._1).getOrElse("bucket"))
     if (rebuildIfDrifted &&
         appendedDriftFraction(catalog, db, name) >= driftFraction)
       rebuildIvfIndex(spark, catalog, db, name)
@@ -1003,13 +1023,14 @@ object SimilaritySearch {
     * the standing vectors set (same md5-ordered sample a from-scratch
     * [[ivfTopK]] trains on, so post-rebuild recall equals the retrained
     * line exactly — soak-asserted) and re-partition the corpus under the
-    * new cells. The rewrite goes to a STAGING set and swaps in via
-    * [[graft.storage.SetCatalog.swapSetGroup]] (marker-committed
-    * remove+rename) — source and destination are the same set here (the
-    * cells are the corpus layout), so an in-place overwrite would read
-    * what it is deleting.
-    */
-  /** `nCentroids = 0` (the default) keeps the standing codebook's size;
+    * new cells, staged and swapped in by [[IndexLifecycle.restage]] —
+    * source and destination are the same set here (the cells are the
+    * corpus layout), so an in-place overwrite would read what it is
+    * deleting. A crash between the two member swaps (new vectors under
+    * the old codebook) is FINISHED, not discarded, by the next rebuild's
+    * recovery preamble or by SetCatalog.recoverAll at catalog open.
+    *
+    * `nCentroids0 = 0` (the default) keeps the standing codebook's size;
     * a positive value RE-SIZES the codebook at rebuild — the semantic
     * tier's need, where k tracks corpus growth by the autoClusters rule
     * ([[graft.operators.Dedup.rebuildSemanticIndex]] computes it from
@@ -1017,49 +1038,22 @@ object SimilaritySearch {
     */
   def rebuildIvfIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 3, nCentroids0: Int = 0): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("vectors", "centroids")
-      .map(s => s"${name}_$s"))
-    val nCentroids = if (nCentroids0 > 0) nCentroids0
-      else catalog.scanSet(db, s"${name}_centroids").count().toInt
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-      .select(col("neighbor_id"), col("n_vec"), col("n_nrm"))
-    // the standing corpus's sidecar already carries its rowcount —
-    // seed the wide-sample prefilter from it (ADVICE r17)
-    val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
-      "neighbor_id", "n_vec",
-      catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    import spark.implicits._
-    val assign = indexAssignUdf(spark, centroids)
-    // Stage the re-partitioned corpus AND the new codebook before
-    // touching live state — the whole-corpus rewrite (the expensive
-    // part; the cells ARE the corpus layout here) runs while searches
-    // still see the consistent old (centroids, vectors) pair, and a
-    // crash before the swaps leaves the live index untouched. The two
-    // swaps commit as ONE marker group (swapSetGroup): a crash between
-    // them (new vectors under the old codebook) or inside either
-    // remove→rename window is FINISHED — not discarded — by the next
-    // rebuild's recoverSwapGroup preamble or by SetCatalog.recoverAll
-    // at catalog open, so a mixed-generation index can serve only
-    // inside the crash-to-recovery window, never past it.
-    val (partCol, laidOut) = cellLayout(spark,
-      vecs.select(col("neighbor_id"), col("n_vec"), col("n_nrm"),
-        assign(col("n_vec")).as("bucket")),
-      centroids.length)
-    catalog.createPartitionedSet(db, s"${name}_vectors_rebuild", laidOut,
-      partCol)
-    catalog.markStaging(db, s"${name}_vectors_rebuild")
-    catalog.createSet(db, s"${name}_centroids_rebuild",
-      withRouteThreshold(spark,
-        centroids.zipWithIndex
-          .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-          .toDF("bucket", "centroid")),
-      policy = "none")
-    catalog.markStaging(db, s"${name}_centroids_rebuild")
-    swapInStaged(catalog, db,
-      Seq(s"${name}_vectors", s"${name}_centroids"))
-    persistBuiltRows(spark, catalog, db, name)
-  }
+      db: String, name: String, iters: Int = 3, nCentroids0: Int = 0): Unit =
+    IndexLifecycle.restage(catalog, db, "_rebuild",
+        Seq(s"${name}_vectors", s"${name}_centroids"),
+        IndexLifecycle.builtMark(name)) {
+      val nCentroids = if (nCentroids0 > 0) nCentroids0
+        else catalog.scanSet(db, s"${name}_centroids").count().toInt
+      val vecs = catalog.scanSet(db, s"${name}_vectors")
+        .select(col("neighbor_id"), col("n_vec"), col("n_nrm"))
+      // the standing corpus's sidecar already carries its rowcount —
+      // seed the wide-sample prefilter from it (ADVICE r17)
+      val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
+        "neighbor_id", "n_vec",
+        catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
+      Seq(writeCellVectors(spark, catalog, db, _, vecs, centroids),
+        writeCentroids(spark, catalog, db, _, centroids, routeMarker = true))
+    }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
     * arriving embeddings is assigned under the standing codebook and
@@ -1073,18 +1067,10 @@ object SimilaritySearch {
       db: String, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
-    val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToIvfIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      driftFraction: Double = 0.5): Unit =
+    StreamRunner.drainEachBatch(stream)(batch =>
+      appendToIvfIndex(stream.sparkSession, catalog, db, name, batch, idCol,
+        vecCol, rebuildIfDrifted, driftFraction))
 
   /** Product-quantization codebooks: the vector's `m` disjoint dim-slices
     * each get an independent k-means sub-codebook trained over the SAME
@@ -1282,52 +1268,31 @@ object SimilaritySearch {
     emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
       l2Norm(col(vecCol)).as("n_nrm"))
 
-  /** Persist PQ sub-codebooks as the tiny `<name>_codebooks` set (one
-    * row per (sub, centroid), components as an array) — shared by the
-    * PQ and IVF-PQ builders.
+  /** A `<name>_codebooks` model set: one row per (sub, centroid),
+    * components as an array — shared by the PQ and IVF-PQ lifecycles.
     */
-  private def persistCodebooks(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String,
-      codebooks: Array[Array[Array[Double]]],
-      suffix: String = ""): Unit = {
+  private def writeCodebooks(
+      spark: SparkSession, catalog: graft.storage.SetCatalog, db: String,
+      set: String, codebooks: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
-    catalog.createSet(db, s"${name}_codebooks$suffix",
+    catalog.createSet(db, set,
       codebooks.zipWithIndex.flatMap { case (cb, j) =>
         cb.zipWithIndex.map { case (v, c) => (j, c.toLong, v.toSeq) }
       }.toSeq.toDF("sub", "centroid", "components"),
       policy = "none")
-    // a staged generation is tagged as catalog-owned the moment it
-    // exists, so recoverAll's convention sweep may resolve it
-    if (suffix.nonEmpty) catalog.markStaging(db, s"${name}_codebooks$suffix")
   }
 
-  /** Crash-recovery preamble for the rebuilds' staged swaps — delegates
-    * to [[graft.storage.SetCatalog.recoverSwapGroup]], whose GROUP
-    * intent marker decides authority for all of a rebuild's sets at
-    * once: a crash between two member swaps no longer leaves a
-    * mixed-generation live index (new codes under old codebooks) for
-    * the next rebuild run to discover — recovery finishes every member.
-    * The earlier sidecar-inference version had a destructive hole on
-    * top: `removeSet` deletes the data tree BEFORE its sidecar, so a
-    * crash inside the target's remove left a live-LOOKING target (stale
-    * sidecar, no data) next to the finished staging set, and the
-    * inference discarded the staging set — the only copy.
+  /** (neighbor_id, codes[, bucket]) rows of a PQ or IVF-PQ code set:
+    * PQ codes under `codebooks`, plus the flat-argmin coarse cell when
+    * `centroids` is given (IVF-PQ).
     */
-  private def recoverStagedSwaps(
-      catalog: graft.storage.SetCatalog, db: String,
-      targets: Seq[String]): Unit =
-    catalog.recoverSwapGroup(db, targets.map(t => s"${t}_rebuild" -> t))
-
-  /** The swap step itself: [[graft.storage.SetCatalog.swapSetGroup]] —
-    * one marker for the whole set group, then remove+rename per member,
-    * then marker clear. A crash anywhere in the sequence (including
-    * BETWEEN members) converges under [[recoverStagedSwaps]].
-    */
-  private def swapInStaged(
-      catalog: graft.storage.SetCatalog, db: String,
-      targets: Seq[String]): Unit =
-    catalog.swapSetGroup(db, targets.map(t => s"${t}_rebuild" -> t))
+  private def codeRows(
+      df: DataFrame, idCol: String, vecCol: String,
+      codebooks: Array[Array[Array[Double]]],
+      centroids: Option[Array[Array[Double]]] = None): DataFrame =
+    df.select(Seq(col(idCol).as("neighbor_id"),
+      pqEncodeUdf(codebooks)(col(vecCol)).as("codes")) ++
+      centroids.map(c => nearestUdf(c)(col(vecCol)).as("bucket")): _*)
 
   /** Asymmetric-distance top-k with exact re-rank: encode the corpus once
     * (the compressed code table), broadcast the queries WITH their LUTs,
@@ -1417,45 +1382,24 @@ object SimilaritySearch {
     val sample = sampleVectors(emb, idCol, vecCol, 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    import spark.implicits._
-    catalog.createSet(db, s"${name}_centroids",
-      centroids.zipWithIndex
-        .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-        .toDF("bucket", "centroid"),
-      policy = "none")
-    persistCodebooks(spark, catalog, db, name, codebooks)
-    val assign = nearestUdf(centroids)
-    val encode = pqEncodeUdf(codebooks)
+    writeCentroids(spark, catalog, db, s"${name}_centroids", centroids,
+      routeMarker = false)
+    writeCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
     catalog.createPartitionedSet(db, s"${name}_codes",
-      emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
-        assign(col(vecCol)).as("bucket")),
-      "bucket")
-    // the vectors set is hash-placed on id and corpus-sized — its bucket
-    // count takes the same sizing rule as buildPqIndex's (explicit, else
-    // the advisor over the corpus rowcount, else the session default);
-    // the CODES layout needs no count: it is directory-partitioned by
-    // coarse cell, where nCentroids IS the layout. The advisor's rowcount
-    // comes off the just-written code set's sidecar (one code row per
-    // corpus vector, counted by its post-write footer pass) — NOT an
-    // extra emb.count() scan of the whole corpus.
-    // the no-advisor default sizes from the same sidecar rowcount the
-    // advisor reads (PlacementAdvisor.bucketCountFor) instead of the
-    // session's shuffle-partition constant — no extra corpus scan
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        val rows = catalog.meta(db, s"${name}_codes").map(_.rows)
-          .getOrElse(emb.count())
-        advisor
-          .map(_.recommendBuckets(s"$db.${name}_vectors", rows,
-            targetRowsPerBucket))
-          .getOrElse(graft.advisor.PlacementAdvisor
-            .bucketCountFor(rows, targetRowsPerBucket))
-      }
+      codeRows(emb, idCol, vecCol, codebooks, Some(centroids)), "bucket")
+    // the vectors set is hash-placed on id and corpus-sized, so it takes
+    // the shared bucket sizing; the CODES layout needs no count: it is
+    // directory-partitioned by coarse cell, where nCentroids IS the
+    // layout. The rowcount comes off the just-written code set's sidecar
+    // (one code row per corpus vector) — NOT an extra corpus scan.
+    val n = IndexLifecycle.bucketCount(numBuckets, advisor,
+      s"$db.${name}_vectors",
+      catalog.meta(db, s"${name}_codes").map(_.rows).getOrElse(emb.count()),
+      targetRowsPerBucket)
     catalog.createSet(db, s"${name}_vectors",
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")),
+      vectorsWithNorm(emb, idCol, vecCol),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
-    persistBuiltRows(spark, catalog, db, name)
+    IndexLifecycle.markRows(catalog, db, IndexLifecycle.builtMark(name))
   }
 
   /** Incrementally extend a persisted IVF-PQ index: assign + encode the
@@ -1482,51 +1426,27 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val assign = nearestUdf(loadIvfCentroids(catalog, db, name))
-    val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToPartitionedSet(db, s"${name}_codes",
-      newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes"),
-        assign(col(vecCol)).as("bucket")),
+      codeRows(newEmb, idCol, vecCol, loadPqCodebooks(catalog, db, name),
+        Some(loadIvfCentroids(catalog, db, name))),
       "bucket")
     catalog.appendToSet(db, s"${name}_vectors",
-      newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")))
+      vectorsWithNorm(newEmb, idCol, vecCol))
     if (rebuildIfDrifted &&
         appendedDriftFraction(catalog, db, name) >= driftFraction)
       rebuildIvfPqIndex(spark, catalog, db, name)
   }
 
-  /** Rows the standing models were last trained over, persisted as the
-    * one-row `<name>_built` set at build/rebuild time — the denominator
-    * of [[appendedDriftFraction]]. The rowcount comes from the vectors
-    * set's sidecar (already computed by its post-write count), so this
-    * costs one tiny parquet write and zero corpus scans.
-    */
-  private def persistBuiltRows(
-      spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String): Unit = {
-    import spark.implicits._
-    val rows = catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L)
-    catalog.createSet(db, s"${name}_built",
-      Seq(rows).toDF("rows_at_build"), policy = "none")
-  }
-
   /** Fraction of the index appended since its models were last
-    * (re)trained: (rows_now - rows_at_build) / rows_at_build. Both
-    * numbers are sidecar reads — O(1), no corpus scan. 0.0 for indexes
-    * built before the `<name>_built` marker existed (they opt into the
-    * rebuild policy at their first rebuild).
+    * (re)trained: (rows_now - rows_at_build) / rows_at_build, read off
+    * the `<name>_built` mark every build and rebuild stamps
+    * ([[IndexLifecycle.builtMark]]). Both numbers are sidecar reads —
+    * O(1), no corpus scan. 0.0 for indexes built before the mark
+    * existed (they opt into the rebuild policy at their first rebuild).
     */
   def appendedDriftFraction(
-      catalog: graft.storage.SetCatalog, db: String, name: String): Double = {
-    val total = catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L)
-    if (catalog.meta(db, s"${name}_built").isEmpty) 0.0
-    else {
-      val base = catalog.scanSet(db, s"${name}_built")
-        .collect()(0).getLong(0)
-      if (base <= 0) 0.0 else (total - base).toDouble / base
-    }
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): Double =
+    IndexLifecycle.growthSinceMark(catalog, db, IndexLifecycle.builtMark(name))
 
   /** Retrain a persisted PQ index's codebooks from its OWN standing
     * vectors set and re-encode the code set in place — the rebuild the
@@ -1536,88 +1456,62 @@ object SimilaritySearch {
     * [[sampleVectors]] orders by md5(id) — not physical row order — the
     * retrain sample over the vectors set is IDENTICAL to a from-scratch
     * [[pqTopK]] train over the same corpus, so post-rebuild recall equals
-    * the retrained line exactly (soak-asserted, pqrecall family).
+    * the retrained line exactly (soak-asserted, pqrecall family). Codes
+    * and codebooks are staged and swapped in as one group
+    * ([[IndexLifecycle.restage]]), so searches never see new codes under
+    * old codebooks.
     */
   def rebuildPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 2): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("codes", "codebooks")
-      .map(s => s"${name}_$s"))
-    val old = loadPqCodebooks(catalog, db, name)
-    val m = old.length
-    val kSub = old(0).length
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-    val codebooks = trainPqCodebooks(vecs, m, kSub, iters, "neighbor_id",
-      "n_vec", knownRowCount =
-        catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-    val cm = catalog.meta(db, s"${name}_codes").getOrElse(
-      throw new IllegalArgumentException(s"rebuildPqIndex: no codes set for $db.$name"))
-    val encode = pqEncodeUdf(codebooks)
-    // Stage BOTH the data rewrite and the model write before touching
-    // live state: searches keep reading the consistent old
-    // (codebooks, codes) pair for the whole expensive part, and a crash
-    // anywhere before the swaps leaves the live index untouched. The
-    // swaps then commit as ONE marker group (swapSetGroup): a crash
-    // between them no longer leaves new codes under old codebooks — the
-    // next rebuild's recoverSwapGroup preamble finishes the whole group
-    // before anything else runs.
-    catalog.createSet(db, s"${name}_codes_rebuild",
-      vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes")),
-      partitionColumn = cm.partitionColumn, numPartitions = cm.numPartitions)
-    catalog.markStaging(db, s"${name}_codes_rebuild")
-    persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    swapInStaged(catalog, db,
-      Seq(s"${name}_codes", s"${name}_codebooks"))
-    persistBuiltRows(spark, catalog, db, name)
-  }
+      db: String, name: String, iters: Int = 2): Unit =
+    IndexLifecycle.restage(catalog, db, "_rebuild",
+        Seq(s"${name}_codes", s"${name}_codebooks"),
+        IndexLifecycle.builtMark(name)) {
+      val old = loadPqCodebooks(catalog, db, name)
+      val vecs = catalog.scanSet(db, s"${name}_vectors")
+      val codebooks = trainPqCodebooks(vecs, old.length, old(0).length,
+        iters, "neighbor_id", "n_vec", knownRowCount =
+          catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
+      val cm = catalog.meta(db, s"${name}_codes").getOrElse(
+        throw new IllegalArgumentException(
+          s"rebuildPqIndex: no codes set for $db.$name"))
+      Seq(
+        catalog.createSet(db, _,
+          codeRows(vecs, "neighbor_id", "n_vec", codebooks),
+          partitionColumn = cm.partitionColumn,
+          numPartitions = cm.numPartitions),
+        writeCodebooks(spark, catalog, db, _, codebooks))
+    }
 
   /** IVF-PQ form of [[rebuildPqIndex]]: retrain BOTH standing models
     * (coarse centroids + sub-codebooks, one shared md5-ordered sample —
     * the same sample [[ivfPqTopK]] trains on over this corpus), replace
     * them, and rewrite the bucket-partitioned code set with fresh
-    * assignments + codes. One scan of the vectors set; the vectors set
-    * itself (hash-placed on id for the re-rank) is untouched.
+    * assignments + codes, all three staged and swapped as one group.
+    * One scan of the vectors set; the vectors set itself (hash-placed on
+    * id for the re-rank) is untouched, and everything staged re-derives
+    * from it.
     */
   def rebuildIvfPqIndex(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
-      db: String, name: String, iters: Int = 2): Unit = {
-    recoverStagedSwaps(catalog, db, Seq("codes", "centroids", "codebooks")
-      .map(s => s"${name}_$s"))
-    val nCentroids = catalog.scanSet(db, s"${name}_centroids").count().toInt
-    val old = loadPqCodebooks(catalog, db, name)
-    val m = old.length
-    val kSub = old(0).length
-    val vecs = catalog.scanSet(db, s"${name}_vectors")
-    val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
-    val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
-    val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    import spark.implicits._
-    val assign = nearestUdf(centroids)
-    val encode = pqEncodeUdf(codebooks)
-    // Stage the data rewrite AND both model writes before touching live
-    // state (rebuildPqIndex's ordering rationale): the expensive
-    // re-encode scan runs while searches still see the consistent old
-    // (centroids, codebooks, codes) triple; the three swaps then commit
-    // as ONE marker group (swapSetGroup), and a crash between any two of
-    // them is FINISHED by the next rebuild's recoverSwapGroup preamble
-    // (no mixed-generation window; everything staged re-derives
-    // from the untouched vectors set).
-    catalog.createPartitionedSet(db, s"${name}_codes_rebuild",
-      vecs.select(col("neighbor_id"), encode(col("n_vec")).as("codes"),
-        assign(col("n_vec")).as("bucket")),
-      "bucket")
-    catalog.markStaging(db, s"${name}_codes_rebuild")
-    catalog.createSet(db, s"${name}_centroids_rebuild",
-      centroids.zipWithIndex
-        .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
-        .toDF("bucket", "centroid"),
-      policy = "none")
-    catalog.markStaging(db, s"${name}_centroids_rebuild")
-    persistCodebooks(spark, catalog, db, name, codebooks, suffix = "_rebuild")
-    swapInStaged(catalog, db, Seq(s"${name}_codes",
-      s"${name}_centroids", s"${name}_codebooks"))
-    persistBuiltRows(spark, catalog, db, name)
-  }
+      db: String, name: String, iters: Int = 2): Unit =
+    IndexLifecycle.restage(catalog, db, "_rebuild",
+        Seq(s"${name}_codes", s"${name}_centroids", s"${name}_codebooks"),
+        IndexLifecycle.builtMark(name)) {
+      val nCentroids = catalog.scanSet(db, s"${name}_centroids").count().toInt
+      val old = loadPqCodebooks(catalog, db, name)
+      val vecs = catalog.scanSet(db, s"${name}_vectors")
+      val sample = sampleVectors(vecs, "neighbor_id", "n_vec", 10000)
+      val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
+      val codebooks = trainPqCodebooksFromSample(sample, old.length,
+        old(0).length, iters)
+      Seq(
+        catalog.createPartitionedSet(db, _,
+          codeRows(vecs, "neighbor_id", "n_vec", codebooks, Some(centroids)),
+          "bucket"),
+        writeCentroids(spark, catalog, db, _, centroids, routeMarker = false),
+        writeCodebooks(spark, catalog, db, _, codebooks))
+    }
 
   /** Streaming form of [[appendToIvfPqIndex]] — batching-invariant like
     * its IVF and PQ siblings. */
@@ -1626,18 +1520,10 @@ object SimilaritySearch {
       db: String, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
-    val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToIvfPqIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      driftFraction: Double = 0.5): Unit =
+    StreamRunner.drainEachBatch(stream)(batch =>
+      appendToIvfPqIndex(stream.sparkSession, catalog, db, name, batch,
+        idCol, vecCol, rebuildIfDrifted, driftFraction))
 
   /** Search a persisted IVF-PQ index: load both models (tiny), compute
     * each query's probe buckets and LUTs, join the broadcast probes
@@ -1702,34 +1588,23 @@ object SimilaritySearch {
       knownRowCount: Long = 0L): Unit = {
     val codebooks = trainPqCodebooks(emb, m, kSub, iters, idCol, vecCol,
       knownRowCount = knownRowCount)
-    persistCodebooks(spark, catalog, db, name, codebooks)
-    // partition-count choice follows the other index builders: explicit,
-    // else the advisor's sizing rule over the corpus rowcount, else the
-    // same rule without history (PlacementAdvisor.bucketCountFor — the
-    // shuffle-partition constant it replaces encoded the local core
-    // count into stored layouts). Pass knownRowCount when the caller
-    // already paid for a count (e.g. the corpus came off a catalog set
-    // whose sidecar carries it) — both auto paths otherwise cost one
-    // extra counting pass here, since BOTH output sets need the bucket
-    // count before their writes (a bare parquet count is footer-cheap).
-    val n = if (numBuckets > 0) numBuckets
-      else {
-        val rows = if (knownRowCount > 0) knownRowCount else emb.count()
-        advisor
-          .map(_.recommendBuckets(s"$db.${name}_codes", rows,
-            targetRowsPerBucket))
-          .getOrElse(graft.advisor.PlacementAdvisor
-            .bucketCountFor(rows, targetRowsPerBucket))
-      }
-    val encode = pqEncodeUdf(codebooks)
+    writeCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
+    // both output sets need the shared bucket count before their writes.
+    // Pass knownRowCount when the caller already paid for a count (e.g.
+    // the corpus came off a catalog set whose sidecar carries it) — the
+    // auto paths otherwise cost one extra counting pass here (a bare
+    // parquet count is footer-cheap).
+    val n = IndexLifecycle.bucketCount(numBuckets, advisor,
+      s"$db.${name}_codes",
+      if (knownRowCount > 0) knownRowCount else emb.count(),
+      targetRowsPerBucket)
     catalog.createSet(db, s"${name}_codes",
-      emb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")),
+      codeRows(emb, idCol, vecCol, codebooks),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
     catalog.createSet(db, s"${name}_vectors",
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")),
+      vectorsWithNorm(emb, idCol, vecCol),
       partitionColumn = Some("neighbor_id"), numPartitions = n)
-    persistBuiltRows(spark, catalog, db, name)
+    IndexLifecycle.markRows(catalog, db, IndexLifecycle.builtMark(name))
   }
 
   private def loadPqCodebooks(
@@ -1766,12 +1641,10 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val encode = pqEncodeUdf(loadPqCodebooks(catalog, db, name))
     catalog.appendToSet(db, s"${name}_codes",
-      newEmb.select(col(idCol).as("neighbor_id"), encode(col(vecCol)).as("codes")))
+      codeRows(newEmb, idCol, vecCol, loadPqCodebooks(catalog, db, name)))
     catalog.appendToSet(db, s"${name}_vectors",
-      newEmb.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-        l2Norm(col(vecCol)).as("n_nrm")))
+      vectorsWithNorm(newEmb, idCol, vecCol))
     if (rebuildIfDrifted &&
         appendedDriftFraction(catalog, db, name) >= driftFraction)
       rebuildPqIndex(spark, catalog, db, name)
@@ -1787,18 +1660,10 @@ object SimilaritySearch {
       db: String, name: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
-      driftFraction: Double = 0.5): Unit = {
-    val spark = stream.sparkSession
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToPqIndex(spark, catalog, db, name, batch.toDF(), idCol, vecCol,
-          rebuildIfDrifted, driftFraction)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+      driftFraction: Double = 0.5): Unit =
+    StreamRunner.drainEachBatch(stream)(batch =>
+      appendToPqIndex(stream.sparkSession, catalog, db, name, batch, idCol,
+        vecCol, rebuildIfDrifted, driftFraction))
 
   /** Search a persisted PQ index: load the codebooks (tiny), ADC-scan
     * the standing code table against the broadcast query LUTs, re-rank
@@ -1909,28 +1774,15 @@ object SimilaritySearch {
       catalog: graft.storage.SetCatalog, db: String, name: String,
       k: Int, nprobe: Int = 4, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Long,
-      Array[Array[Double]], Array[Array[Array[Double]]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sc = catalog.metaStamp(db, s"${name}_centroids")
-      val sb = catalog.metaStamp(db, s"${name}_codebooks")
-      val (centroids, codebooks) = cached match {
-        case Some((c0, b0, ce, cb))
-            if c0 == sc && b0 == sb && sc != 0L && sb != 0L => (ce, cb)
-        case _ =>
-          val ce = loadIvfCentroids(catalog, db, name)
-          val cb = loadPqCodebooks(catalog, db, name)
-          cached = Some((sc, sb, ce, cb))
-          loadCount += 1
-          (ce, cb)
-      }
-      searchIvfPqWithModels(catalog, db, name, batch, k, nprobe, shortlist,
-        idCol, vecCol, centroids, codebooks)
+      : (DataFrame => DataFrame, () => Int) =
+    IndexLifecycle.generationCached(catalog, db,
+      Seq(s"${name}_centroids", s"${name}_codebooks"),
+      _ => (loadIvfCentroids(catalog, db, name),
+        loadPqCodebooks(catalog, db, name))) {
+      case (batch, (centroids, codebooks)) =>
+        searchIvfPqWithModels(catalog, db, name, batch, k, nprobe,
+          shortlist, idCol, vecCol, centroids, codebooks)
     }
-    (fn, () => loadCount)
-  }
 
   private[graft] def ivfPqSearchProbeFn(
       catalog: graft.storage.SetCatalog, db: String, name: String,
@@ -1964,24 +1816,12 @@ object SimilaritySearch {
       catalog: graft.storage.SetCatalog, db: String, name: String,
       k: Int, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Array[Array[Double]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sc = catalog.metaStamp(db, s"${name}_centroids")
-      val centroids = cached match {
-        case Some((c0, ce)) if c0 == sc && sc != 0L => ce
-        case _ =>
-          val ce = loadIvfCentroids(catalog, db, name)
-          cached = Some((sc, ce))
-          loadCount += 1
-          ce
-      }
+      : (DataFrame => DataFrame, () => Int) =
+    IndexLifecycle.generationCached(catalog, db, Seq(s"${name}_centroids"),
+      _ => loadIvfCentroids(catalog, db, name)) { (batch, centroids) =>
       searchIvfWithModels(catalog, db, name, batch, k, nprobe, idCol,
         vecCol, centroids)
     }
-    (fn, () => loadCount)
-  }
 
   /** Streaming search of a persisted IVF index — [[searchIvfIndex]] per
     * micro-batch under the live-index contract.
@@ -2001,24 +1841,12 @@ object SimilaritySearch {
       catalog: graft.storage.SetCatalog, db: String, name: String,
       k: Int, shortlist: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame => DataFrame, () => Int) = {
-    var cached: Option[(Long, Array[Array[Array[Double]]])] = None
-    var loadCount = 0
-    val fn = (batch: DataFrame) => {
-      val sb = catalog.metaStamp(db, s"${name}_codebooks")
-      val codebooks = cached match {
-        case Some((b0, cb)) if b0 == sb && sb != 0L => cb
-        case _ =>
-          val cb = loadPqCodebooks(catalog, db, name)
-          cached = Some((sb, cb))
-          loadCount += 1
-          cb
-      }
+      : (DataFrame => DataFrame, () => Int) =
+    IndexLifecycle.generationCached(catalog, db, Seq(s"${name}_codebooks"),
+      _ => loadPqCodebooks(catalog, db, name)) { (batch, codebooks) =>
       searchPqWithModels(catalog, db, name, batch, k, shortlist, idCol,
         vecCol, codebooks)
     }
-    (fn, () => loadCount)
-  }
 
   /** Streaming search of a persisted PQ index — [[searchPqIndex]] per
     * micro-batch under the live-index contract.

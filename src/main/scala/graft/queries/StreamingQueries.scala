@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Event
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamRunner}
 
 /** Structured Streaming queries surfaced through the batch driver contract:
   * each runs the streaming plan to completion over the fixture files
@@ -44,11 +44,8 @@ object StreamingQueries {
   def stHourly(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.hourlyCounts(stream)
-      .writeStream.format("memory").queryName("st_hourly_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_hourly_sink")
+    StreamRunner.drainToMemory(EventStreams.hourlyCounts(stream),
+      "st_hourly_sink", "complete")
   }
 
   val stHourlySql: String = OperatorQueries.eventsHourlySql
@@ -59,11 +56,8 @@ object StreamingQueries {
   def stSliding(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.slidingCounts(stream)
-      .writeStream.format("memory").queryName("st_sliding_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_sliding_sink")
+    StreamRunner.drainToMemory(EventStreams.slidingCounts(stream),
+      "st_sliding_sink", "complete")
   }
 
   /** Batch oracle: the 4 slide offsets materialized per event. Window
@@ -88,11 +82,8 @@ object StreamingQueries {
     import spark.implicits._
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
       .as[Event]
-    val q = EventStreams.sessionize(stream)
-      .writeStream.format("memory").queryName("st_sessions_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_sessions_sink")
+    StreamRunner.drainToMemory(EventStreams.sessionize(stream),
+      "st_sessions_sink", "append")
       .groupBy(col("user_id"))
       .agg(max(col("session_seq")).as("n_sessions"))
   }
@@ -141,15 +132,12 @@ object StreamingQueries {
   def stDedup(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = stream
+    val uniques = stream
       .withWatermark("ts", "2 hours")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-      .writeStream.format("memory").queryName("st_dedup_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_dedup_sink")
+    StreamRunner.drainToMemory(uniques, "st_dedup_sink", "complete")
   }
 
   val stDedupSql: String =
@@ -166,11 +154,8 @@ object StreamingQueries {
       .groupBy(col("user_id"))
       .agg((count(lit(1)) >= 70L).as("heavy_user"))
     val stream = EventStreams.readEventStream(spark, s"$d/events.parquet")
-    val q = EventStreams.enrichWithProfile(stream, dim)
-      .writeStream.format("memory").queryName("st_enrich_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_enrich_sink")
+    StreamRunner.drainToMemory(EventStreams.enrichWithProfile(stream, dim),
+      "st_enrich_sink", "complete")
   }
 
   val stEnrichSql: String =
@@ -190,11 +175,8 @@ object StreamingQueries {
       .filter(col("event_type") === "purchase")
     val views = EventStreams.readEventStream(spark, s"$d/events.parquet")
       .filter(col("event_type") === "view")
-    val q = EventStreams.purchaseViewJoin(purchases, views)
-      .writeStream.format("memory").queryName("st_join_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_join_sink")
+    StreamRunner.drainToMemory(EventStreams.purchaseViewJoin(purchases, views),
+      "st_join_sink", "append")
       .groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
   }
@@ -678,11 +660,9 @@ object StreamingQueries {
   def stCurate(spark0: SparkSession, d: String): DataFrame = {
     val spark = streamSession(spark0)
     val stream = readDocStream(spark, d)
-    val q = graft.operators.Curation.piiScan(stream, "doc_id", "text")
-      .writeStream.format("memory").queryName("st_curate_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_curate_sink")
+    StreamRunner.drainToMemory(
+      graft.operators.Curation.piiScan(stream, "doc_id", "text"),
+      "st_curate_sink", "append")
   }
 
   /** Oracle: the batch PII scan over the same fixture rows (txt_pii's
@@ -1089,10 +1069,7 @@ object StreamingQueries {
     val out = graft.operators.Curation.streamTokenBudget(
       readDocStream(spark, d), "doc_id", "text",
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory").queryName("st_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_budget_sink")
+    StreamRunner.drainToMemory(out, "st_budget_sink", "append")
       .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
   }
 
@@ -1149,11 +1126,7 @@ object StreamingQueries {
       readDocStream(spark, d), "doc_id", "text", "lang",
       Map("en" -> 0.5, "fr" -> 0.2, "de" -> 0.2),
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_domain_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("st_domain_budget_sink")
+    StreamRunner.drainToMemory(out, "st_domain_budget_sink", "append")
       .select(col("doc_id"), col("domain"), col("shard"),
         col("n_tokens"), col("cum_tokens"))
   }
@@ -1269,11 +1242,8 @@ object StreamingQueries {
       .parquet(s"${root.toString}/stx.gated")
     val out = graft.operators.Curation.streamTokenBudget(
       gstream, "doc_id", "text", totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_pipe_lm_budget_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val res = spark.table("st_pipe_lm_budget_sink")
+    val res = StreamRunner.drainToMemory(out,
+      "st_pipe_lm_budget_sink", "append")
       .select(col("doc_id"), col("shard"), col("n_tokens"), col("cum_tokens"))
       .localCheckpoint(true)
     Seq("txt_hashes", "frm_hashes", "env_fps", "gated")
@@ -1505,11 +1475,8 @@ object StreamingQueries {
       tstream, "doc_id", "text", "tier",
       Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
       totalTokens = 30000L, nShards = 8)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("st_pipe_quality_mix_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val res = spark.table("st_pipe_quality_mix_sink")
+    val res = StreamRunner.drainToMemory(out,
+      "st_pipe_quality_mix_sink", "append")
       .select(col("doc_id"), col("domain"), col("shard"),
         col("n_tokens"), col("cum_tokens"))
       .localCheckpoint(true)

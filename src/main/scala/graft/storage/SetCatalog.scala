@@ -174,7 +174,7 @@ object SetCatalog {
   * staging leftovers are DISCARDED as re-derivable), and an ad-hoc
   * reader of someone else's root shouldn't silently apply it.
   */
-final class SetCatalog(spark: SparkSession, root: String,
+final class SetCatalog(private[graft] val spark: SparkSession, root: String,
     recoverDbsOnOpen: Seq[String] = Nil) {
   Files.createDirectories(Paths.get(root))
   recoverDbsOnOpen.foreach(recoverAll(_))

@@ -161,34 +161,27 @@ object EventStreams {
     // sink mode needs no init: the first batch creates the set, a later
     // run finds it and keeps merging into it (restart semantics)
     var snapshot: Option[DataFrame] = None
-    val q = stream
-      .select(cols: _*)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val compacted = latestPerKey(batch.toDF())
-        sink match {
-          case Some((cat, db, set)) =>
-            val prior =
-              if (cat.meta(db, set).exists(_.rows > 0))
-                Some(cat.scanSet(db, set)) else None
-            val merged = prior match {
-              case Some(s) => latestPerKey(s.unionByName(compacted))
-              case None => compacted
-            }
-            // stage: the merge READS the set it is about to overwrite
-            val staged = merged.localCheckpoint(eager = true)
-            cat.createSet(db, set, staged, policy = "none")
-          case None =>
-            snapshot = Some((snapshot match {
-              case Some(s) => latestPerKey(s.unionByName(compacted))
-              case None => compacted
-            }).localCheckpoint(eager = true))
-        }
-        ()
+    StreamRunner.drainEachBatch(stream.select(cols: _*)) { batch =>
+      val compacted = latestPerKey(batch)
+      sink match {
+        case Some((cat, db, set)) =>
+          val prior =
+            if (cat.meta(db, set).exists(_.rows > 0))
+              Some(cat.scanSet(db, set)) else None
+          val merged = prior match {
+            case Some(s) => latestPerKey(s.unionByName(compacted))
+            case None => compacted
+          }
+          // stage: the merge READS the set it is about to overwrite
+          val staged = merged.localCheckpoint(eager = true)
+          cat.createSet(db, set, staged, policy = "none")
+        case None =>
+          snapshot = Some((snapshot match {
+            case Some(s) => latestPerKey(s.unionByName(compacted))
+            case None => compacted
+          }).localCheckpoint(eager = true))
       }
-      .outputMode(OutputMode.Append)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     sink match {
       case Some((cat, db, set)) =>
         if (cat.meta(db, set).exists(_.rows > 0)) cat.scanSet(db, set)
