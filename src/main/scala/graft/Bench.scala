@@ -19,6 +19,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** `local[N]` width of the measurement mains (Bench, Soak, SemScale,
+    * LaScale, StageProfile, PlanCheck): `SPARK_GRAFT_CPUS`, else this
+    * host's core count — a fixed default would oversubscribe a smaller
+    * host and skew [[screenCpu]]'s cpus×wall bound.
+    */
+  private[graft] def hostCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+
   /** Fixed synthetic workload used both as untimed warmup and as the
     * timed calibration probe: agg + join + sort + a small parquet
     * round-trip, touching the scheduler, whole-stage codegen, shuffle,
@@ -703,7 +712,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = hostCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -131,9 +131,9 @@ object LaScale {
     if (mode == "kernel") { kernelBench(); return }
 
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${Bench.hostCpus}]")
       .appName("graft-la-scale")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", Bench.hostCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // 8 MB dense rows: keep columnar cache batches bounded (~128 MB)

@@ -20,12 +20,13 @@ import graft.operators.{Dedup, SimilaritySearch}
   *             routed Lloyd up to k = 16384, the parallel hierarchical
   *             tree above — [[SimilaritySearch.trainCentroidsTree]],
   *             VERDICT r19 next #2)
-  *  - assign:  the FULL-CORPUS routed assignment
-  *             ([[SimilaritySearch.routedNearestUdf]]: two-level √k
-  *             router up to k = 16384, the hierarchical assignment tree
-  *             past it — [[SimilaritySearch.treeNearestUdf]], ~4·k^0.25
-  *             distance evals per row, VERDICT r20 next #3) forced
-  *             through a groupBy count; the flat argmin is O(n·k·d)
+  *  - assign:  the FULL-CORPUS routed assignment, kernel chosen by
+  *             [[SimilaritySearch.routerFor]] (two-level √k router up to
+  *             k = 16384, the assignment tree past it, ~4·k^0.25
+  *             distance evals per row) and reported per step as
+  *             `router` + `fanout` (coarse cells, or the tree's branch
+  *             factor), forced through a groupBy count; the flat argmin
+  *             is O(n·k·d)
   *  - flat:    at the smallest step only, the flat assignment over the
   *             same centroids, for the measured speedup factor
   * plus sum(|cluster|²)/n — the within-cluster candidate-pair bound per
@@ -49,7 +50,7 @@ object SemScale {
   def main(args: Array[String]): Unit = {
     val ns = args.headOption.getOrElse("1250000,2500000,5000000")
       .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.hostCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -101,7 +102,15 @@ object SemScale {
       val (centroids, trainS) = timed {
         SimilaritySearch.trainCentroidsRouted(sample, k, iters = 3)
       }
-      val assign = SimilaritySearch.routedNearestUdf(centroids, 2)
+      val router = SimilaritySearch.routerFor(Dedup.routeThreshold,
+        centroids, treeAllowed = true)
+      val (routerKind, fanout) = router match {
+        case r: SimilaritySearch.TwoLevel => ("two_level", r.coarse.length)
+        case _: SimilaritySearch.Tree =>
+          ("tree", SimilaritySearch.treeRouteBranch(centroids.length))
+        case _ => ("flat", centroids.length)
+      }
+      val assign = SimilaritySearch.routerUdf(router)
       val (sizes, assignS) = timed {
         emb.select(assign(col("embedding")).as("c"))
           .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -174,13 +183,12 @@ object SemScale {
             (col("vec_id") + n).as("vec_id"), col("embedding")),
           "vec_id", "embedding")
       }
-      val standingC = cat.scanSet("ss", "idx_centroids")
-        .orderBy(col("bucket")).collect().map(_.getSeq[Double](1).toArray)
+      val standing = SimilaritySearch.loadRouter(spark, cat, "ss", "idx")
       val (probed, probeS) = timed {
         Dedup.semanticBatchPairs(
           corpus(spark, 1000L).select(
             (col("vec_id") + 2 * n).as("vec_id"), col("embedding")),
-          standingC, cat.scanSet("ss", "idx_vectors"),
+          standing, cat.scanSet("ss", "idx_vectors"),
           "vec_id", "embedding", threshold = 0.999).count()
       }
       // every probe row IS a corpus vector — its identity pair is in its
@@ -189,19 +197,20 @@ object SemScale {
       require(probed >= 1000L,
         s"index probe found $probed pairs for 1000 identity arrivals at n=$n")
       graft.storage.SetCatalog.deleteTree(root)
-      System.err.println(f"[semscale] n=$n k=$k cells=$cells " +
-        f"sample=$sampleS%.1f train=$trainS%.1f assign=$assignS%.1f " +
+      System.err.println(f"[semscale] n=$n k=$k router=$routerKind " +
+        f"fanout=$fanout sample=$sampleS%.1f train=$trainS%.1f assign=$assignS%.1f " +
         f"flat=${flatS.getOrElse(Double.NaN)}%.1f ssOverN=$pairBound%.1f " +
         f"idx_build=$buildS%.1f idx_dirs=$nDirs idx_append=$appendS%.1f " +
         f"idx_probe=$probeS%.1f")
-      (n, k, cells, usedCells, sampleS, trainS, assignS, flatS, pairBound,
-        buildS, nDirs, appendS, probeS, buildAttempts)
+      (n, k, (routerKind, fanout), usedCells, sampleS, trainS, assignS,
+        flatS, pairBound, buildS, nDirs, appendS, probeS, buildAttempts)
     }
 
     def r2(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val steps = rows.map {
-      case (n, k, cells, used, sa, tr, as, fl, pb, ib, nd, ia, ip, ba) =>
-        s"""{"n":$n,"k":$k,"cells":$cells,"cells_used":$used,""" +
+      case (n, k, (kind, fanout), used, sa, tr, as, fl, pb, ib, nd, ia, ip, ba) =>
+        s"""{"n":$n,"k":$k,"router":"$kind","fanout":$fanout,""" +
+          s""""cells_used":$used,""" +
           s""""advised_match":true,""" +
           s""""sample_s":${r2(sa)},"train_s":${r2(tr)},"assign_s":${r2(as)},""" +
           s""""flat_assign_s":${fl.map(r2).getOrElse("null")},""" +

@@ -21,7 +21,7 @@ object Soak {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scales = args.headOption.getOrElse("1,4,16")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.hostCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -1040,14 +1040,12 @@ object Soak {
             cat, "soak", "semr", replica(i), "vec_id", "embedding")
         }
         val idxSec = (System.nanoTime() - t0) / 1e9
-        def probe(): Set[(Long, Long)] = {
-          val centroids = cat.scanSet("soak", "semr_centroids")
-            .orderBy(col("bucket")).collect()
-            .map(_.getSeq[Double](1).toArray)
-          pairSet(graft.operators.Dedup.semanticBatchPairs(
-            queries, centroids, cat.scanSet("soak", "semr_vectors"),
+        def probe(): Set[(Long, Long)] =
+          pairSet(graft.operators.Dedup.semanticBatchPairs(queries,
+            graft.operators.SimilaritySearch
+              .loadRouter(spark, cat, "soak", "semr"),
+            cat.scanSet("soak", "semr_vectors"),
             "vec_id", "embedding", threshold = 0.4))
-        }
         t0 = System.nanoTime()
         val gotApp = probe()
         val probeSec = (System.nanoTime() - t0) / 1e9
@@ -1077,11 +1075,10 @@ object Soak {
           val cat2 = new graft.storage.SetCatalog(spark, root2.toString)
           graft.operators.Dedup.persistSemanticIndex(
             cat2, "soak", "semr", full, "vec_id", "embedding")
-          val centroids2 = cat2.scanSet("soak", "semr_centroids")
-            .orderBy(col("bucket")).collect()
-            .map(_.getSeq[Double](1).toArray)
           val gotScratch = pairSet(graft.operators.Dedup.semanticBatchPairs(
-            queries, centroids2, cat2.scanSet("soak", "semr_vectors"),
+            queries, graft.operators.SimilaritySearch
+              .loadRouter(spark, cat2, "soak", "semr"),
+            cat2.scanSet("soak", "semr_vectors"),
             "vec_id", "embedding", threshold = 0.4))
           require(gotReb == gotScratch,
             s"rebuilt probe pairs diverge from a from-scratch build's " +
@@ -1258,11 +1255,10 @@ object Soak {
         graft.operators.Dedup.persistSemanticIndex(cat, "soak", "prl",
           emb(nV, 0L), "vec_id", "embedding")
         val buildSec = (System.nanoTime() - t0) / 1e9
-        val (centroids, routeT) = graft.operators.SimilaritySearch
-          .loadCentroidsWithThreshold(spark, cat, "soak", "prl")
+        val router = graft.operators.SimilaritySearch
+          .loadRouter(spark, cat, "soak", "prl")
         val vectors = cat.scanSet("soak", "prl_vectors")
-        val assign = graft.operators.SimilaritySearch
-          .indexAssignUdfFor(routeT, centroids)
+        val assign = graft.operators.SimilaritySearch.routerUdf(router)
         val bucketType = vectors.schema("bucket").dataType
         import graft.functions.TextFunctions.l2Norm
         for (batchRows <- Seq(8, 128)) {
@@ -1278,9 +1274,8 @@ object Soak {
           def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
           val pruned = (0 until nBatches).map { i =>
             val t = System.nanoTime()
-            graft.operators.Dedup.semanticBatchPairs(batch(i), centroids,
-              vectors, "vec_id", "embedding", 0.999,
-              routeThreshold = Some(routeT)).count()
+            graft.operators.Dedup.semanticBatchPairs(batch(i), router,
+              vectors, "vec_id", "embedding", 0.999).count()
             (System.nanoTime() - t) / 1e9
           }
           val unpruned = (0 until nBatches).map { i =>

@@ -35,9 +35,9 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${Bench.hostCpus}]")
       .appName("graft-stage-profile")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", Bench.hostCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -284,18 +284,18 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
     * term at n·target (linear); `maxClusters` is the codebook-broadcast
     * MEMORY bound (~100 MB at 200k × 64 dims × 8 B), past which
     * `targetClusterSize` itself grows as ceil(n / maxClusters) — the
-    * knob that extends the linear regime arbitrarily; and past
-    * `routeThreshold` fine centroids the assignment routes through
-    * ceil(√k) coarse cells (O(n·√k·d) instead of O(n·k·d)). The corpus
-    * size is remembered in the same `setRows` history the bucket sizing
-    * uses, so a later call with a stale/smaller count still sizes for
-    * the largest corpus this table has been observed at.
+    * knob that extends the linear regime arbitrarily; and `routeCells`
+    * is ⌈√k⌉ past `routeThreshold` fine centroids, else 0 (advisory
+    * only — see [[SemGeometry]]). The corpus size is remembered in the
+    * same `setRows` history the bucket sizing uses, so a later call
+    * with a stale/smaller count still sizes for the largest corpus this
+    * table has been observed at.
     */
   def recommendSemGeometry(
       table: String, rows: Long,
       baseTargetClusterSize: Int = 125,
       maxClusters: Int = 200000,
-      routeThreshold: Int = 2048): SemGeometry = {
+      routeThreshold: Int = graft.operators.Dedup.routeThreshold): SemGeometry = {
     val n = math.max(rows, setRows.getOrElse(table, 0L))
     setRows(table) = n
     persist()
@@ -303,10 +303,8 @@ final class PlacementAdvisor(historyPath: Option[String] = None) {
       (n + maxClusters - 1) / maxClusters).toInt
     val k = math.min(
       math.max(4L, (n + target - 1) / target), maxClusters.toLong).toInt
-    val cells =
-      if (k > routeThreshold) math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-      else 0
-    SemGeometry(target, k, cells)
+    SemGeometry(target, k,
+      graft.operators.SimilaritySearch.routedCellsFor(routeThreshold, k))
   }
 
   /** Record one measured point of an index's probe-width quality dial:
@@ -493,8 +491,10 @@ object PlacementAdvisor {
 
 /** [[PlacementAdvisor.recommendSemGeometry]]'s recommendation: the
   * SemDeDup cluster-size knob, the codebook size it implies, and the
-  * coarse routing cell count (0 = flat assignment, below the routing
-  * threshold).
+  * static rule's two-level cell count (0 = flat assignment, below the
+  * routing threshold). `routeCells` is not forwarded to the operator:
+  * its kernel resolver ([[graft.operators.SimilaritySearch.routerFor]])
+  * runs the tree, not the two-level router, past k = 16384.
   */
 final case class SemGeometry(
     targetClusterSize: Int, clusters: Int, routeCells: Int)

@@ -1249,18 +1249,29 @@ object Dedup {
     exactAgainstHashes(newDocs, scanExactIndex(catalog, db, name),
       idCol, textCol)
 
-  /** Scan a [[persistExactIndex]] set, failing FAST on a non-binary
-    * fingerprint column (same rationale as the gram-index guard: a
-    * schema-drifted index would silently match nothing).
-    */
+  /** Scan a [[persistExactIndex]] set ([[scanKeyIndex]]: 16-byte binary
+    * `h`). */
   private[graft] def scanExactIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val hashes = catalog.scanBucketedSet(db, s"${name}_hashes")
-    require(hashes.schema("h").dataType ==
-        org.apache.spark.sql.types.BinaryType,
-      s"exact index $db.${name}_hashes stores ${hashes.schema("h").dataType} " +
-        "fingerprints; rebuild it with persistExactIndex")
-    hashes
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyIndex(catalog, db, s"${name}_hashes", "h",
+      org.apache.spark.sql.types.BinaryType, "exact", "persistExactIndex")
+
+  /** Scan the bucketed set of a key index (exact, fingerprint, gram),
+    * failing FAST when its key column is not `keyType`: an index
+    * persisted by an older key layout (e.g. a pre-binary gram index
+    * storing 32-char hex strings) joined against today's probes would
+    * silently match nothing — a total recall collapse — so a loud
+    * rebuild demand naming `persist` is the only safe behavior.
+    */
+  private def scanKeyIndex(
+      catalog: graft.storage.SetCatalog, db: String, set: String, key: String,
+      keyType: org.apache.spark.sql.types.DataType, kind: String,
+      persist: String): DataFrame = {
+    val df = catalog.scanBucketedSet(db, set)
+    val stored = df.schema(key).dataType
+    require(stored == keyType,
+      s"$kind index $db.$set stores $stored fingerprints; rebuild it with $persist")
+    df
   }
 
   /** In-memory form of [[exactAgainstStoredIndex]]: `corpusHashes` is any
@@ -1327,19 +1338,13 @@ object Dedup {
       "fp", numBuckets, advisor, targetRowsPerBucket)
   }
 
-  /** Scan a [[persistFingerprintIndex]] set, failing FAST on a non-long
-    * fingerprint column (a schema-drifted index would silently match
-    * nothing — same guard as [[scanExactIndex]]).
-    */
+  /** Scan a [[persistFingerprintIndex]] set ([[scanKeyIndex]]: long
+    * `fp`). */
   private[graft] def scanFingerprintIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val fps = catalog.scanBucketedSet(db, s"${name}_fps")
-    require(fps.schema("fp").dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"fingerprint index $db.${name}_fps stores ${fps.schema("fp").dataType} " +
-        "fingerprints; rebuild it with persistFingerprintIndex")
-    fps
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyIndex(catalog, db, s"${name}_fps", "fp",
+      org.apache.spark.sql.types.LongType, "fingerprint",
+      "persistFingerprintIndex")
 
   /** Rows annotated with whether their long fingerprint already exists in
     * `corpusFps` — the [[exactAgainstHashesKeyed]] analogue for
@@ -1493,21 +1498,12 @@ object Dedup {
     spansAgainstGrams(newDocs, scanGramIndex(catalog, db, name),
       idCol, textCol, k)
 
-  /** Scan a [[persistGramIndex]] set, failing FAST if the stored
-    * fingerprint column isn't 16-byte binary (an index persisted by a
-    * pre-binary-key build stores 32-char hex strings; joining binary
-    * probes against it would silently match nothing — a total recall
-    * collapse — so a loud rebuild demand is the only safe behavior).
-    */
+  /** Scan a [[persistGramIndex]] set ([[scanKeyIndex]]: 16-byte binary
+    * `g`). */
   private def scanGramIndex(
-      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame = {
-    val grams = catalog.scanBucketedSet(db, s"${name}_grams")
-    require(grams.schema("g").dataType ==
-        org.apache.spark.sql.types.BinaryType,
-      s"gram index $db.${name}_grams stores ${grams.schema("g").dataType} " +
-        "fingerprints (pre-binary-key layout); rebuild it with persistGramIndex")
-    grams
-  }
+      catalog: graft.storage.SetCatalog, db: String, name: String): DataFrame =
+    scanKeyIndex(catalog, db, s"${name}_grams", "g",
+      org.apache.spark.sql.types.BinaryType, "gram", "persistGramIndex")
 
   /** In-memory form of [[spansAgainstStoredIndex]]: `corpusGrams` is any
     * frame exposing the fingerprint column `g`.
@@ -1662,13 +1658,10 @@ object Dedup {
     * codebook.
     *
     * Past k = 2048 ([[routeThreshold]]) assignment no longer runs the
-    * flat O(n·k·d) argmin: [[semanticPairs]] routes every row through a
-    * ~√k coarse quantizer trained over the k centroids themselves and
-    * argmins only within the routed cell
-    * ([[SimilaritySearch.twoLevelNearestUdf]] — the ivfPqTopK shape
-    * applied to codebook assignment), O(n·√k·d); the driver trainer
-    * takes the same routed step ([[SimilaritySearch.trainCentroidsRouted]])
-    * and the training sample scales to 2k rows so seeds exist for every
+    * flat O(n·k·d) argmin: [[semanticPairs]] assigns through a routed
+    * kernel (regimes on [[SimilaritySearch.routerFor]]); the driver
+    * trainer routes too ([[SimilaritySearch.trainCentroidsRouted]]) and
+    * the training sample scales to 2k rows so seeds exist for every
     * centroid. That removes the quadratic term the old
     * `maxClusters = 10000` cap used to hide (n > 1.25M vectors at the
     * defaults; measured beyond it in SEMDEDUP_SCALE_r12.json).
@@ -1688,11 +1681,12 @@ object Dedup {
       math.max(4L, (n + targetClusterSize - 1) / targetClusterSize),
       maxClusters.toLong).toInt
 
-  /** Codebook size above which [[semanticPairs]] switches from the flat
-    * per-row argmin to two-level routed assignment (and the trainer to
-    * routed Lloyd steps). Below it behavior is bit-identical to the
-    * pre-routing engine — the regime every DuckDB oracle runs in
-    * (k = 2048 needs a 256k-vector corpus at the default target).
+  /** Codebook size above which assignment leaves the flat per-row
+    * argmin for a routed kernel ([[SimilaritySearch.routerFor]]) and the
+    * trainer takes routed Lloyd steps. Below it behavior is
+    * bit-identical to the pre-routing engine — the regime every DuckDB
+    * oracle runs in (k = 2048 needs a 256k-vector corpus at the
+    * default target).
     */
   val routeThreshold: Int = 2048
 
@@ -1718,12 +1712,11 @@ object Dedup {
     * explicit k to pin the geometry and keep the input fully lazy
     * (tests; corpora whose size the caller already knows).
     *
-    * Assignment regime: k ≤ [[routeThreshold]] runs the flat argmin
-    * (bit-identical to every oracle); larger codebooks route through a
-    * √k coarse quantizer ([[SimilaritySearch.twoLevelNearestUdf]]) so
-    * the corpus pass is O(n·√k·d) — see [[autoClusters]]. `routeCells`
-    * > 0 FORCES two-level assignment with that many coarse cells at any
-    * k (the dd_semantic_route oracle exercises the routed path at
+    * Assignment regime: [[SimilaritySearch.routerFor]] at
+    * [[routeThreshold]] — flat up to k = 2048 (bit-identical to every
+    * oracle), routed above it. `routeCells` > 0 FORCES two-level
+    * assignment with that many coarse cells at any k (the
+    * dd_semantic_route oracle exercises the routed path at
     * oracle-reachable scale); `routeIters` is the coarse trainer's
     * Lloyd iteration count.
     */
@@ -1747,15 +1740,11 @@ object Dedup {
       corpus, idCol, vecCol, math.max(10000, 2 * k), nRows)
     val centroids = SimilaritySearch.trainCentroidsRouted(
       sample, k, iters, routeThreshold)
-    val assign =
+    val assign = SimilaritySearch.routerUdf(
       if (routeCells > 0)
-        SimilaritySearch.twoLevelNearestUdf(centroids, routeCells, routeIters)
-      else if (k > routeThreshold)
-        // √k two-level router up to treeRouteThreshold, the assignment
-        // tree past it (SEMDEDUP_SCALE_r20: the two-level corpus pass
-        // was the lifecycle's remaining super-linear stage)
-        SimilaritySearch.routedNearestUdf(centroids, routeIters)
-      else SimilaritySearch.nearestUdf(centroids)
+        SimilaritySearch.twoLevelRouter(centroids, routeCells, routeIters)
+      else SimilaritySearch.routerFor(routeThreshold, centroids,
+        treeAllowed = true, routeIters))
     val withC = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .transform(Parallelism.ensureWidth)
@@ -1791,10 +1780,9 @@ object Dedup {
     * carries the measured parity row), so this is the same engine with
     * a memory, not a second regime. The recommendation's `routeCells`
     * is NOT forwarded: `semanticPairs` picks the assignment kernel from
-    * k exactly as the static path does (flat up to [[routeThreshold]],
-    * [[SimilaritySearch.routedNearestUdf]] above it), where a forwarded
-    * cell count would force the two-level router even past the tree
-    * threshold.
+    * k exactly as the static path does ([[SimilaritySearch.routerFor]]),
+    * where a forwarded cell count would force the two-level router even
+    * past the tree threshold.
     */
   def semanticPairsAdvised(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -1923,27 +1911,31 @@ object Dedup {
       nCentroids0 = autoClusters(rows, targetClusterSize))
   }
 
-  /** One micro-batch of [[streamSemanticAgainstIndex]]: assign each
-    * arrival under the STANDING codebook (the same assignment kernel
-    * the corpus was assigned with — flat below the routing threshold,
-    * √k-routed above it), then verify cosine against the standing
-    * vectors of the arrival's cell only. The arrival side is
-    * broadcast, so the standing set is read with dynamic partition
-    * pruning — a batch touching b distinct cells costs b directories of
-    * IO however large the corpus grows.
-    */
+  /** [[semanticBatchPairs]] over an in-memory codebook, routed as a
+    * build in this session would route it; a persisted index probes
+    * through its own markers ([[semanticProbeFn]]). */
   private[graft] def semanticBatchPairs(
       batch: DataFrame, centroids: Array[Array[Double]],
       vectors: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, routeThreshold: Option[Int] = None): DataFrame = {
-    // the index lifecycle's shared assignment rule (flat below the
-    // routing threshold, √k-routed above): arrivals MUST assign exactly
-    // as the standing vectors were, or probes read the wrong cells —
-    // `routeThreshold` carries the index's PERSISTED threshold when the
-    // caller probes a persisted index (session conf otherwise)
-    val assign = routeThreshold
-      .map(SimilaritySearch.indexAssignUdfFor(_, centroids))
-      .getOrElse(SimilaritySearch.indexAssignUdf(batch.sparkSession, centroids))
+      threshold: Double): DataFrame =
+    semanticBatchPairs(batch, SimilaritySearch.routerFor(
+        SimilaritySearch.sessionRouteThreshold(batch.sparkSession),
+        centroids, treeAllowed = true),
+      vectors, idCol, vecCol, threshold)
+
+  /** One micro-batch of [[streamSemanticAgainstIndex]]: assign each
+    * arrival with `router` — the kernel the standing corpus was
+    * assigned with, or probes read the wrong cells — then verify cosine
+    * against the standing vectors of the arrival's cell only. The
+    * arrival side is broadcast, so the standing set is read with
+    * partition pruning — a batch touching b distinct cells costs b
+    * directories of IO however large the corpus grows.
+    */
+  private[graft] def semanticBatchPairs(
+      batch: DataFrame, router: SimilaritySearch.Router,
+      vectors: DataFrame, idCol: String, vecCol: String,
+      threshold: Double): DataFrame = {
+    val assign = SimilaritySearch.routerUdf(router)
     val bucketType = vectors.schema("bucket").dataType
     // eager: the arrival frame is batch-sized and used twice below (the
     // touched-cell collect and the broadcast join) — without this the
@@ -2038,11 +2030,9 @@ object Dedup {
     // 200k-cell semantic codebook) — paid per micro-batch it would dwarf
     // small batches, and APPENDS never change the codebook
     IndexLifecycle.generationCached(catalog, db, Seq(s"${name}_centroids"),
-      SimilaritySearch.loadCentroidsWithThreshold(_, catalog, db, name)) {
-      case (batch, (centroids, routeT)) =>
-        semanticBatchPairs(batch, centroids,
-          catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold,
-          routeThreshold = Some(routeT))
+      SimilaritySearch.loadRouter(_, catalog, db, name)) { (batch, router) =>
+      semanticBatchPairs(batch, router,
+        catalog.scanSet(db, s"${name}_vectors"), idCol, vecCol, threshold)
     }
 
   /** Brute-force cosine near-dup pairs — the EXACT regime of a

@@ -30,10 +30,20 @@ object SimilaritySearch {
       // spread the scan side so the broadcast probe runs wide (no-op when
       // the input is already wide)
       .transform(Parallelism.ensureWidth)
+    topKByCosine(
+      n.crossJoin(broadcast(q)).filter(col("query_id") =!= col("neighbor_id")),
+      k)
+  }
+
+  /** The closing stage every cosine top-k search shares: score
+    * (query_id, q_vec, q_nrm, neighbor_id, n_vec, n_nrm) pairs by cosine
+    * rounded to 1e-6 and keep each query's `k` best, ties to the
+    * smaller neighbor id. Output (query_id, rank, neighbor_id, cos).
+    */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    n.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    pairs
       .withColumn("cos",
         round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
       .withColumn("rank", row_number().over(w))
@@ -177,13 +187,24 @@ object SimilaritySearch {
 
   private[graft] def trainCentroidsFromSample(
       sample: Array[Array[Double]], nCentroids: Int,
-      iters: Int): Array[Array[Double]] = {
+      iters: Int): Array[Array[Double]] =
+    lloyd(sample, nCentroids, iters)(Flat(_))
+
+  /** Lloyd iterations over a driver-side sample: seeds are the first
+    * `nCentroids` rows; each step assigns every row through the router
+    * of the CURRENT centroids, sums members in sample order, and moves
+    * each centroid to its mean (an empty cluster keeps its centroid).
+    */
+  private def lloyd(
+      sample: Array[Array[Double]], nCentroids: Int, iters: Int)(
+      router: Array[Array[Double]] => Router): Array[Array[Double]] = {
     var centroids = sample.take(nCentroids).map(_.clone())
     for (_ <- 1 to iters) {
+      val r = router(centroids)
       val sums = Array.fill(nCentroids)(new Array[Double](centroids(0).length))
       val counts = new Array[Long](nCentroids)
       sample.foreach { v =>
-        val c = nearest(centroids, v)
+        val c = r.assign(v)
         counts(c) += 1
         var i = 0
         while (i < v.length) { sums(c)(i) += v(i); i += 1 }
@@ -206,12 +227,16 @@ object SimilaritySearch {
     * tiebreak), so assignment parity with the SQL oracles is preserved.
     */
   def nearestUdf(centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      nearest(centroids, arr).toLong
-    })
+    routerUdf(Flat(centroids))
+
+  /** A row's float vector as doubles — the one conversion every vector
+    * UDF does first, once per row. */
+  private def toDoubles(v: Seq[Float]): Array[Double] = {
+    val arr = new Array[Double](v.length)
+    var i = 0
+    while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
+    arr
+  }
 
   /** The `nprobe` nearest centroid ids for a query vector, ascending by
     * (distance, bucket) — one distance pass, same ordering as the SQL
@@ -219,43 +244,92 @@ object SimilaritySearch {
     */
   def probeUdf(centroids: Array[Array[Double]], nprobe: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      val dists = centroids.map { c =>
-        var d = 0.0
-        var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
-        d
-      }
-      dists.zipWithIndex.sortBy { case (d, b) => (d, b) }.take(nprobe).map(_._2.toLong).toSeq
+      val arr = toDoubles(v)
+      centroids.map(sqDist(_, arr)).zipWithIndex.sortBy { case (d, b) => (d, b) }
+        .take(nprobe).map(_._2.toLong).toSeq
     })
 
-  /** Coarse router over a FINE codebook: train a small coarse quantizer
-    * over the k fine centroids THEMSELVES (the [[ivfPqTopK]] cell shape
-    * applied to codebook assignment — the fix named by
-    * [[graft.operators.Dedup.autoClusters]]'s scaladoc since round 11),
-    * then group each fine centroid under its nearest coarse cell. Empty
-    * cells are dropped, so every routable cell has at least one fine
-    * centroid to argmin over. Everything here is driver-side over the
-    * codebook only — O(k·nCoarse·d), never touching the corpus.
-    * Returns (non-empty coarse centroids ascending by original seed
-    * index, member fine-centroid GLOBAL indices per cell, ascending).
+  /** The per-row assignment kernel of a codebook: `assign` returns the
+    * GLOBAL index of the fine centroid a vector belongs to. Three
+    * kernels, one descriptor; [[routerFor]] picks among them and says
+    * when each applies. All three keep the flat argmin's IEEE operation
+    * order (sequential diff² from 0.0) and its first-strict-min
+    * tie-break on every level, so ties go to the smallest global index
+    * and assignment is deterministic and oracle-reproducible. Plain
+    * serializable case classes: a router rides in the UDF closure
+    * exactly like the flat codebook does ([[routerUdf]]).
+    *  - [[Flat]]: argmin over every centroid, O(k·d) per row.
+    *  - [[TwoLevel]]: route to the nearest non-empty coarse cell, then
+    *    argmin over ONLY that cell's `members` (global indices,
+    *    ascending) — O(2·√k·d) per row with ⌈√k⌉ cells. Approximate by
+    *    design: the true nearest centroid can live in a neighboring
+    *    cell (the IVF recall trade).
+    *  - [[Tree]]: descend the [[buildRouteTree]] hierarchy with a b-way
+    *    argmin per level, then argmin over the reached leaf —
+    *    ~4·k^(1/4) distance evaluations per row, approximate like
+    *    TwoLevel. SEMDEDUP_SCALE_r20 measured the two-level corpus pass
+    *    as the lifecycle's asymptotic ceiling (assign_exp 1.69).
     */
-  private[graft] def coarseRouter(
-      centroids: Array[Array[Double]], nCoarse: Int,
+  private[graft] sealed trait Router extends Serializable {
+    val centroids: Array[Array[Double]]
+    private[graft] final def assign(v: Array[Double]): Int = this match {
+      case Flat(cs) => nearest(cs, v)
+      case TwoLevel(cs, coarse, members) =>
+        nearestAmong(cs, members(nearest(coarse, v)), v)
+      case Tree(cs, root) =>
+        var node = root
+        while (node.isInstanceOf[RouteBranch]) {
+          val b = node.asInstanceOf[RouteBranch]
+          node = b.children(nearest(b.centers, v))
+        }
+        nearestAmong(cs, node.asInstanceOf[RouteLeaf].members, v)
+    }
+  }
+  private[graft] final case class Flat(centroids: Array[Array[Double]])
+      extends Router
+  private[graft] final case class TwoLevel(
+      centroids: Array[Array[Double]], coarse: Array[Array[Double]],
+      members: Array[Array[Int]]) extends Router
+  private[graft] final case class Tree(
+      centroids: Array[Array[Double]], root: RouteNode) extends Router
+
+  /** The one assignment UDF: the row's vector is converted once, then
+    * assigned by `router`. */
+  private[graft] def routerUdf(
+      router: Router): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((v: Seq[Float]) => router.assign(toDoubles(v)).toLong)
+
+  /** Split the fine centroids `idxs` into cells: train an `nCoarse`-way
+    * coarse quantizer over those centroids THEMSELVES (the
+    * [[ivfPqTopK]] cell shape applied to codebook assignment) and group
+    * each under its nearest coarse center. Empty cells are dropped, so
+    * every cell has a member to argmin over; members keep the ascending
+    * order of `idxs`. Driver-side over the codebook only. Returns
+    * (non-empty coarse centers in seed order, members per cell).
+    */
+  private def splitCells(
+      centroids: Array[Array[Double]], idxs: Array[Int], nCoarse: Int,
       iters: Int): (Array[Array[Double]], Array[Array[Int]]) = {
-    val coarse = trainCentroidsFromSample(centroids, nCoarse, iters)
+    val rows = idxs.map(centroids(_))
+    val coarse = trainCentroidsFromSample(rows, nCoarse, iters)
     val members =
       Array.fill(coarse.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    var c = 0
-    while (c < centroids.length) {
-      members(nearest(coarse, centroids(c))) += c
-      c += 1
-    }
+    idxs.indices.foreach(i => members(nearest(coarse, rows(i))) += idxs(i))
     val nonEmpty = members.indices.filter(members(_).nonEmpty).toArray
     (nonEmpty.map(coarse), nonEmpty.map(members(_).toArray))
   }
+
+  private[graft] def twoLevelRouter(
+      centroids: Array[Array[Double]], nCoarse: Int, iters: Int): TwoLevel = {
+    val (coarse, members) =
+      splitCells(centroids, centroids.indices.toArray, nCoarse, iters)
+    TwoLevel(centroids, coarse, members)
+  }
+
+  private[graft] def treeRouter(
+      centroids: Array[Array[Double]], iters: Int): Tree =
+    Tree(centroids, buildRouteTree(centroids, centroids.indices.toArray,
+      treeRouteBranch(centroids.length), iters))
 
   /** ceil(√k) — the standard two-level cell count: k/√k fine centroids
     * per cell in expectation, so a routed argmin costs O(2·√k·d) per row
@@ -264,48 +338,10 @@ object SimilaritySearch {
   private[graft] def sqrtCells(k: Int): Int =
     math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** Two-level nearest-centroid assignment: route each row to its
-    * nearest (non-empty) coarse cell, then argmin over ONLY that cell's
-    * fine centroids — O(√k·d) per row. Returns the GLOBAL fine-centroid
-    * index, so downstream grouping is identical in shape to
-    * [[nearestUdf]]. Approximate by design: the true nearest fine
-    * centroid can live in a neighboring coarse cell (the IVF recall
-    * trade); ties break to the smallest global index on both levels,
-    * exactly like the flat argmin, so the routed assignment is
-    * deterministic and oracle-reproducible.
-    */
-  def twoLevelNearestUdf(
-      centroids: Array[Array[Double]], nCoarse: Int,
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val (coarse, members) = coarseRouter(centroids, nCoarse, routeIters)
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      val mem = members(nearest(coarse, arr))
-      // argmin over the cell's members in ascending GLOBAL index order —
-      // first-strict-min, so ties resolve like the flat kernel's
-      var best = mem(0)
-      var bestD = Double.MaxValue
-      var m = 0
-      while (m < mem.length) {
-        val c = centroids(mem(m))
-        var d = 0.0
-        var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
-        if (d < bestD) { bestD = d; best = mem(m) }
-        m += 1
-      }
-      best.toLong
-    })
-  }
-
-  /** Node of the hierarchical assignment router ([[treeNearestUdf]]):
-    * either an internal b-way split (coarse centers + matching
-    * children) or a leaf holding fine-centroid GLOBAL indices,
-    * ascending. Plain serializable case classes — the tree rides in
-    * the UDF closure exactly like the flat codebook does, adding only
-    * ~k/(b−1) interior centers to it.
+  /** Node of the [[Tree]] router: either an internal b-way split (coarse
+    * centers + matching children) or a leaf holding fine-centroid
+    * GLOBAL indices, ascending. The tree adds only ~k/(b−1) interior
+    * centers to the closure.
     */
   private[graft] sealed trait RouteNode extends Serializable
   private[graft] final case class RouteBranch(
@@ -324,170 +360,111 @@ object SimilaritySearch {
   private[graft] def treeRouteBranch(k: Int): Int =
     math.max(2, math.ceil(math.pow(k.toDouble, 0.25)).toInt)
 
-  /** Recursive b-way split of a fine-centroid index set: train a b-way
-    * coarse quantizer over the member centroids themselves (the
-    * [[coarseRouter]] step applied per node), partition members by
-    * nearest coarse center, recurse. Members keep ascending global
-    * order through the stable partition, so leaf argmins tie-break to
-    * the smallest global index exactly like the flat kernel — the tree
-    * is a pure, deterministic function of the codebook. A node whose
-    * members collapse into one coarse cell (duplicate centroids) stops
+  /** Recursive b-way [[splitCells]] of a fine-centroid index set — a
+    * pure, deterministic function of the codebook. A node whose members
+    * collapse into one coarse cell (duplicate centroids) stops
     * splitting and becomes a leaf.
     */
   private[graft] def buildRouteTree(
       centroids: Array[Array[Double]], idxs: Array[Int], branch: Int,
       iters: Int): RouteNode = {
     if (idxs.length <= branch) return RouteLeaf(idxs)
-    val rows = idxs.map(centroids(_))
-    val coarse = trainCentroidsFromSample(rows, branch, iters)
-    val members =
-      Array.fill(coarse.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    var i = 0
-    while (i < idxs.length) {
-      members(nearest(coarse, rows(i))) += idxs(i)
-      i += 1
-    }
-    val nonEmpty = members.indices.filter(members(_).nonEmpty).toArray
-    if (nonEmpty.length <= 1) RouteLeaf(idxs)
-    else RouteBranch(
-      nonEmpty.map(coarse),
-      nonEmpty.map(c =>
-        buildRouteTree(centroids, members(c).toArray, branch, iters)))
+    val (coarse, members) = splitCells(centroids, idxs, branch, iters)
+    if (members.length <= 1) RouteLeaf(idxs)
+    else RouteBranch(coarse,
+      members.map(buildRouteTree(centroids, _, branch, iters)))
   }
 
-  /** Tree-routed nearest-centroid assignment for HUGE codebooks
-    * (k > [[treeRouteThreshold]] — the semantic-index regime, k ≈ n/125):
-    * descend the [[buildRouteTree]] hierarchy with a b-way argmin per
-    * level, then argmin over only the reached leaf's fine centroids —
-    * ~4·k^(1/4) distance evaluations per row. Same contract as
-    * [[twoLevelNearestUdf]]: returns the GLOBAL fine-centroid index,
-    * approximate by design (the IVF recall trade, one level deeper),
-    * deterministic under any schedule, ties to the smallest global
-    * index. SEMDEDUP_SCALE_r20 measured the two-level corpus assignment
-    * as the lifecycle's asymptotic ceiling (assign_exp 1.69 ≈ the
-    * O(n·√k·d) design shape); this is the tree the trainer already
-    * climbs ([[trainCentroidsTree]]) applied to the cluster side.
-    */
+  /** Tree-routed nearest-centroid assignment ([[Tree]]) as a UDF. */
   def treeNearestUdf(
       centroids: Array[Array[Double]],
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val tree = buildRouteTree(centroids, centroids.indices.toArray,
-      treeRouteBranch(centroids.length), routeIters)
-    udf((v: Seq[Float]) => {
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      var node = tree
-      while (node.isInstanceOf[RouteBranch]) {
-        val b = node.asInstanceOf[RouteBranch]
-        node = b.children(nearest(b.centers, arr))
-      }
-      val mem = node.asInstanceOf[RouteLeaf].members
-      var best = mem(0)
-      var bestD = Double.MaxValue
-      var m = 0
-      while (m < mem.length) {
-        val c = centroids(mem(m))
-        var d = 0.0
-        var j = 0
-        while (j < arr.length) { val diff = c(j) - arr(j); d += diff * diff; j += 1 }
-        if (d < bestD) { bestD = d; best = mem(m) }
-        m += 1
-      }
-      best.toLong
-    })
-  }
+      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    routerUdf(treeRouter(centroids, routeIters))
 
-  /** Codebook size above which routed assignment dispatches from the
-    * two-level router to the [[treeNearestUdf]] hierarchy — the SAME
-    * boundary as the trainer's [[treeTrainThreshold]], so the two
-    * lifecycle dimensions (train, assign) switch regimes together.
-    * Every oracle-scale (k ≤ 2048, flat) and spec-pinned mid-size
-    * routed path (k ≤ 16384, two-level) is bit-identical to before;
-    * only the multi-million-row semantic builds cross it.
+  /** Codebook size above which a fresh codebook routes through the
+    * [[Tree]] — the SAME boundary as the trainer's
+    * [[treeTrainThreshold]], so train and assign switch regimes
+    * together.
     */
   private[graft] def treeRouteThreshold: Int = treeTrainThreshold
 
-  /** The routed (above-threshold) assignment kernel: two-level √k
-    * router up to [[treeRouteThreshold]], the assignment tree past it.
-    * Pure function of the codebook, so build, append, rebuild and
-    * probe of one index always agree.
+  /** The one assignment-kernel resolver. With k = `centroids.length`
+    * and t the routing threshold ([[graft.operators.Dedup.routeThreshold]]
+    * = 2048 unless a test session overrides it), three regimes:
+    *  - k ≤ t: [[Flat]], bit-identical to every oracle (k = 2048 needs
+    *    a 256k-vector corpus at SemDeDup's n/125 sizing);
+    *  - t < k ≤ [[treeRouteThreshold]] (16384): [[TwoLevel]] over
+    *    ⌈√k⌉ coarse cells ([[routedCellsFor]]);
+    *  - k > 16384: [[Tree]] when `treeAllowed`, else [[TwoLevel]].
+    * Index lifecycles route too: a semantic codebook grows with the
+    * corpus (k ≈ n/125), and a flat pass would be O(n·k·d) again.
+    *
+    * `treeAllowed` is true for a codebook built now — a persisted build
+    * records the choice as the `route_kernel_tree` marker
+    * ([[routeMarkers]]) — and, for a persisted codebook, says whether
+    * it carries that marker. A persisted codebook above 16384 without
+    * it was assigned under TwoLevel (before the tree existed) and keeps
+    * it, so its arrivals and probes land in the cells its standing
+    * vectors were written to. Indexes above 16384 built by the releases
+    * that had the tree but not yet the marker were assigned with the
+    * tree and now resolve to TwoLevel: one [[rebuildIvfIndex]] /
+    * [[graft.operators.Dedup.rebuildSemanticIndex]] re-assigns them and
+    * writes the marker. IVF-PQ does not come here: it assigns Flat at
+    * every k.
     */
-  private[graft] def routedNearestUdf(
-      centroids: Array[Array[Double]],
-      routeIters: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    if (centroids.length > treeRouteThreshold)
-      treeNearestUdf(centroids, routeIters)
-    else
-      twoLevelNearestUdf(centroids, sqrtCells(centroids.length), routeIters)
-
-  /** Routed-cell count for a PERSISTED index's per-row assignment: 0
-    * (flat argmin) at or below the routing threshold, ceil(√k) above it
-    * — [[graft.operators.Dedup.semanticPairs]]' rule applied to the
-    * index lifecycle, because a semantic index's codebook grows with
-    * the corpus (k ≈ n/125 — 200k cells at 25M vectors) and a flat
-    * O(n·k·d) assignment pass in build/append/probe would re-acquire
-    * exactly the quadratic term routing removed from the pair operator.
-    * The rule is a PURE FUNCTION of the persisted centroid count (plus
-    * the session threshold), so build, append, rebuild and probe all
-    * derive the identical assignment with nothing extra to persist or
-    * crash-protect. `spark.graft.ann.routeThreshold` exists so tests
-    * can exercise the routed lifecycle at fixture scale — it is an
-    * engine constant in production (an index must be probed under the
-    * threshold it was built with; the default never changes mid-run).
-    */
-  private[graft] def autoRouteCells(
-      spark: SparkSession, k: Int): Int =
-    routedCellsFor(sessionRouteThreshold(spark), k)
+  private[graft] def routerFor(
+      threshold: Int, centroids: Array[Array[Double]], treeAllowed: Boolean,
+      routeIters: Int = 2): Router = {
+    val cells = routedCellsFor(threshold, centroids.length)
+    if (cells == 0) Flat(centroids)
+    else if (treeAllowed && centroids.length > treeRouteThreshold)
+      treeRouter(centroids, routeIters)
+    else twoLevelRouter(centroids, cells, routeIters)
+  }
 
   /** The session-conf read of the routing threshold — the BUILD-time
-    * authority. Probe/append stages of a PERSISTED index must NOT read
-    * this: they derive the threshold from the index itself
-    * ([[persistedRouteThreshold]]), because an index built in a session
-    * with a non-default threshold and probed in one without it would
+    * authority. Lifecycle stages of a PERSISTED index must NOT read
+    * this: they take the threshold from the index itself
+    * ([[loadRouter]]), because an index built in a session with a
+    * non-default threshold and probed in one without it would
     * otherwise assign arrivals to different cells than the standing
     * vectors — identity pairs silently lost (ADVICE r15).
+    * `spark.graft.ann.routeThreshold` exists so tests can exercise the
+    * routed lifecycle at fixture scale; it is an engine constant in
+    * production.
     */
   private[graft] def sessionRouteThreshold(spark: SparkSession): Int =
     spark.conf.get("spark.graft.ann.routeThreshold",
       graft.operators.Dedup.routeThreshold.toString).toInt
 
-  /** The routing rule as a pure function of (threshold, k). */
+  /** The routing rule as a pure function of (threshold, k): 0 (flat) at
+    * or below the threshold, ⌈√k⌉ coarse cells above it. */
   private[graft] def routedCellsFor(threshold: Int, k: Int): Int =
     if (k > threshold) sqrtCells(k) else 0
 
-  /** The per-row cell-assignment kernel every persisted-index lifecycle
-    * stage shares: flat argmin below the routing threshold (bit-
-    * identical to every oracle), two-level routed above it. This
-    * overload reads the SESSION threshold — for the build/rebuild
-    * paths, which persist their decision; lifecycle stages of an
-    * existing index use [[indexAssignUdfFor]] with the index's OWN
-    * persisted threshold.
+  /** The kernel's self-describing witness, mirroring the grouped
+    * layout's `cell_group_N` pattern: marker COLUMNS of the centroids
+    * set record the threshold the index was built under
+    * (`route_threshold_2048`) and, when [[routerFor]] picked the tree,
+    * `route_kernel_tree`. Atomic with the codebook by construction (the
+    * swap that replaces the codebook replaces its markers), nothing
+    * extra to crash-protect, and neither a session conf drift nor an
+    * engine upgrade after the build can desynchronize assignment
+    * between the standing vectors and later arrivals/probes. At
+    * k ≤ 16384 the schema is the pre-tree one.
     */
-  private[graft] def indexAssignUdf(
-      spark: SparkSession, centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    indexAssignUdfFor(sessionRouteThreshold(spark), centroids)
+  private[graft] def routeMarkers(threshold: Int, router: Router): Seq[String] =
+    s"route_threshold_$threshold" +:
+      (if (router.isInstanceOf[Tree]) Seq("route_kernel_tree") else Nil)
 
-  private[graft] def indexAssignUdfFor(
-      threshold: Int, centroids: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val cells = routedCellsFor(threshold, centroids.length)
-    if (cells > 0) routedNearestUdf(centroids, routeIters = 2)
-    else nearestUdf(centroids)
+  /** The router a build or rebuild assigns with — session threshold,
+    * tree allowed — and the markers recording it. */
+  private def freshRouter(
+      spark: SparkSession, centroids: Array[Array[Double]]): (Router, Seq[String]) = {
+    val t = sessionRouteThreshold(spark)
+    val router = routerFor(t, centroids, treeAllowed = true)
+    (router, routeMarkers(t, router))
   }
-
-  /** The routing regime's self-describing witness, mirroring the
-    * grouped layout's `cell_group_N` pattern: the centroids set carries
-    * a marker COLUMN whose name encodes the threshold the index was
-    * built under (`route_threshold_2048`) — atomic with the codebook by
-    * construction (the swap that replaces the codebook replaces its
-    * threshold), nothing extra to crash-protect, and a session-conf
-    * drift after build cannot desynchronize assignment between the
-    * standing vectors and later arrivals/probes.
-    */
-  private[graft] def withRouteThreshold(
-      spark: SparkSession, centroidsDf: DataFrame): DataFrame =
-    centroidsDf.withColumn(
-      s"route_threshold_${sessionRouteThreshold(spark)}", lit(true))
 
   /** Parse the persisted threshold back out of a centroids frame's
     * schema; None for pre-marker (legacy) indexes, which fall back to
@@ -498,21 +475,35 @@ object SimilaritySearch {
     centroidsDf.columns.find(_.startsWith("route_threshold_"))
       .map(_.stripPrefix("route_threshold_").toInt)
 
-  /** Collect a persisted codebook (bucket-ordered) together with the
-    * routing threshold governing ITS assignments: the persisted marker
-    * when present, else the session conf (legacy indexes). Every
-    * lifecycle stage of an existing index loads centroids through this
-    * one path, so the assignment regime cannot fork between stages.
+  private def indexRouteThreshold(
+      spark: SparkSession, centroidsDf: DataFrame): Int =
+    persistedRouteThreshold(centroidsDf).getOrElse(sessionRouteThreshold(spark))
+
+  /** The router of a persisted IVF or semantic codebook, resolved from
+    * its own markers. Every lifecycle stage of an existing index
+    * assigns through this one path, so the kernel cannot fork between
+    * stages.
     */
+  private[graft] def loadRouter(
+      spark: SparkSession, catalog: graft.storage.SetCatalog,
+      db: String, name: String): Router = {
+    val df = catalog.scanSet(db, s"${name}_centroids")
+    routerFor(indexRouteThreshold(spark, df), collectCentroids(df),
+      treeAllowed = df.columns.contains("route_kernel_tree"))
+  }
+
+  /** A persisted codebook with the routing threshold governing it. */
   private[graft] def loadCentroidsWithThreshold(
       spark: SparkSession, catalog: graft.storage.SetCatalog,
       db: String, name: String): (Array[Array[Double]], Int) = {
     val df = catalog.scanSet(db, s"${name}_centroids")
-    val cents = df.orderBy(col("bucket")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    (cents,
-      persistedRouteThreshold(df).getOrElse(sessionRouteThreshold(spark)))
+    (collectCentroids(df), indexRouteThreshold(spark, df))
   }
+
+  /** The bucket-ordered collect of a `<name>_centroids` set. */
+  private def collectCentroids(df: DataFrame): Array[Array[Double]] =
+    df.orderBy(col("bucket")).select(col("centroid"))
+      .collect().map(_.getSeq[Double](0).toArray)
 
   /** Directory-fanout bound for the cell-partitioned vector set: one
     * directory PER CELL is the right layout at ANN-scale k (16-256
@@ -635,13 +626,10 @@ object SimilaritySearch {
       spark: SparkSession, emb: DataFrame, k: Int, iters: Int,
       idCol: String, vecCol: String,
       knownRowCount: Long = 0L): Array[Array[Double]] = {
-    val threshold = spark.conf
-      .get("spark.graft.ann.routeThreshold",
-        graft.operators.Dedup.routeThreshold.toString).toInt
     trainCentroidsRouted(
       sampleVectors(emb, idCol, vecCol, math.max(10000, 2 * k),
         knownRowCount),
-      k, iters, threshold)
+      k, iters, sessionRouteThreshold(spark))
   }
 
   /** Lloyd training with two-level routed assignment steps for LARGE k:
@@ -654,12 +642,13 @@ object SimilaritySearch {
     * codebook outgrows the old 10k cap (hierarchical k-means, public
     * method — e.g. Nistér & Stewénius's vocabulary tree, CVPR 2006).
     * No oracle can reach this regime (k > 2048 needs n > 256k vectors);
-    * its contract is pinned by ExtendedSpec instead: delegation below
+    * its contract is pinned by PipelineSpec instead: delegation below
     * the threshold, determinism and flat-agreement above it.
     */
   private[graft] def trainCentroidsRouted(
       sample: Array[Array[Double]], nCentroids: Int, iters: Int,
-      routeThreshold: Int = 2048): Array[Array[Double]] = {
+      routeThreshold: Int = graft.operators.Dedup.routeThreshold)
+      : Array[Array[Double]] = {
     if (nCentroids <= routeThreshold)
       return trainCentroidsFromSample(sample, nCentroids, iters)
     // HUGE codebooks (k above treeTrainThreshold — the 2M+-row semantic
@@ -674,34 +663,8 @@ object SimilaritySearch {
     // threshold, flat agreement on separated blobs) is spec-pinned.
     if (nCentroids > treeTrainThreshold)
       return trainCentroidsTree(sample, nCentroids, iters)
-    var centroids = sample.take(nCentroids).map(_.clone())
-    for (_ <- 1 to iters) {
-      val (coarse, members) = coarseRouter(centroids, sqrtCells(nCentroids), 2)
-      val sums = Array.fill(centroids.length)(new Array[Double](centroids(0).length))
-      val counts = new Array[Long](centroids.length)
-      sample.foreach { v =>
-        val mem = members(nearest(coarse, v))
-        var best = mem(0)
-        var bestD = Double.MaxValue
-        var m = 0
-        while (m < mem.length) {
-          val cen = centroids(mem(m))
-          var d = 0.0
-          var j = 0
-          while (j < v.length) { val diff = cen(j) - v(j); d += diff * diff; j += 1 }
-          if (d < bestD) { bestD = d; best = mem(m) }
-          m += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < v.length) { sums(best)(i) += v(i); i += 1 }
-      }
-      centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_ / counts(c))
-      }.toArray
-    }
-    centroids
+    lloyd(sample, nCentroids, iters)(
+      twoLevelRouter(_, sqrtCells(nCentroids), 2))
   }
 
   /** Above this codebook size [[trainCentroidsRouted]] dispatches to
@@ -866,18 +829,42 @@ object SimilaritySearch {
     ks
   }
 
+  /** Squared distance, diff² accumulated sequentially from 0.0 — the
+    * operation order every assignment kernel and oracle shares. */
+  private def sqDist(c: Array[Double], v: Array[Double]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < v.length) { val diff = c(i) - v(i); d += diff * diff; i += 1 }
+    d
+  }
+
+  /** First-strict-min argmin of [[sqDist]] over every centroid. */
   private def nearest(centroids: Array[Array[Double]], v: Array[Double]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
-      var d = 0.0
-      var i = 0
-      while (i < v.length) {
-        val diff = centroids(c)(i) - v(i); d += diff * diff; i += 1
-      }
+      val d = sqDist(centroids(c), v)
       if (d < bestD) { bestD = d; best = c }
       c += 1
+    }
+    best
+  }
+
+  /** [[nearest]] over only the fine centroids `members` (global
+    * indices, ascending) — the member-level argmin of [[TwoLevel]] and
+    * [[Tree]], returning the global index.
+    */
+  private def nearestAmong(
+      centroids: Array[Array[Double]], members: Array[Int],
+      v: Array[Double]): Int = {
+    var best = members(0)
+    var bestD = Double.MaxValue
+    var m = 0
+    while (m < members.length) {
+      val d = sqDist(centroids(members(m)), v)
+      if (d < bestD) { bestD = d; best = members(m) }
+      m += 1
     }
     best
   }
@@ -901,15 +888,8 @@ object SimilaritySearch {
     val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       l2Norm(col(vecCol)).as("q_nrm"),
       explode(probe(col(vecCol))).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    bucketed.join(broadcast(probes), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    topKByCosine(bucketed.join(broadcast(probes), Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Persist an IVF index into the set catalog: the codebook as a tiny
@@ -935,45 +915,46 @@ object SimilaritySearch {
     // whole corpus (ADVICE r17 / VERDICT r18 next #4)
     val centroids = indexTrainCentroids(spark, emb, nCentroids, iters,
       idCol, vecCol, knownRowCount)
+    val (router, markers) = freshRouter(spark, centroids)
     writeCentroids(spark, catalog, db, s"${name}_centroids", centroids,
-      routeMarker = true)
+      markers)
     writeCellVectors(spark, catalog, db, s"${name}_vectors",
-      vectorsWithNorm(emb, idCol, vecCol), centroids)
+      vectorsWithNorm(emb, idCol, vecCol), router)
     IndexLifecycle.markRows(catalog, db, IndexLifecycle.builtMark(name))
   }
 
   /** A `<name>_centroids` model set: one (bucket, centroid) row per
-    * cell. IVF and semantic codebooks carry the `route_threshold_N`
-    * marker ([[withRouteThreshold]]); IVF-PQ's carry none, because its
-    * assignment is the flat [[nearestUdf]] at every size.
+    * cell, plus one boolean column per marker. IVF and semantic
+    * codebooks carry their kernel's [[routeMarkers]]; IVF-PQ's carry
+    * none, because its assignment is the flat [[nearestUdf]] at every
+    * size.
     */
   private def writeCentroids(
       spark: SparkSession, catalog: graft.storage.SetCatalog, db: String,
       set: String, centroids: Array[Array[Double]],
-      routeMarker: Boolean): Unit = {
+      markers: Seq[String]): Unit = {
     import spark.implicits._
     val df = centroids.zipWithIndex
       .map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
       .toDF("bucket", "centroid")
     catalog.createSet(db, set,
-      if (routeMarker) withRouteThreshold(spark, df) else df,
-      policy = "none")
+      markers.foldLeft(df)(_.withColumn(_, lit(true))), policy = "none")
   }
 
-  /** Assign (neighbor_id, n_vec, n_nrm) rows to their cells and write
-    * them cell-partitioned — the IVF/semantic build and rebuild. Routed
-    * above the session threshold (semantic-scale codebooks), the SAME
-    * rule every later append/probe derives FROM THE PERSISTED MARKER, so
+  /** Assign (neighbor_id, n_vec, n_nrm) rows to their cells with the
+    * build's `router` and write them cell-partitioned — the
+    * IVF/semantic build and rebuild. Every later append/probe resolves
+    * the same kernel FROM THE PERSISTED MARKERS ([[loadRouter]]), so
     * assignments never mix even across sessions with different conf;
     * grouped directories above the fanout bound, likewise
     * schema-witnessed.
     */
   private def writeCellVectors(
       spark: SparkSession, catalog: graft.storage.SetCatalog, db: String,
-      set: String, vecs: DataFrame, centroids: Array[Array[Double]]): Unit = {
-    val assign = indexAssignUdf(spark, centroids)
+      set: String, vecs: DataFrame, router: Router): Unit = {
     val (partCol, laidOut) = cellLayout(spark,
-      vecs.withColumn("bucket", assign(col("n_vec"))), centroids.length)
+      vecs.withColumn("bucket", routerUdf(router)(col("n_vec"))),
+      router.centroids.length)
     catalog.createPartitionedSet(db, set, laidOut, partCol)
   }
 
@@ -1001,14 +982,12 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rebuildIfDrifted: Boolean = false,
       driftFraction: Double = 0.5): Unit = {
-    val (centroids, threshold) =
-      loadCentroidsWithThreshold(spark, catalog, db, name)
     // the standing schema is the witness for BOTH regimes: arrivals
-    // assign under the index's persisted routing threshold (never the
-    // session conf), and grouped sets append into their group
-    // directories under the modulus the build wrote — each parsed from
-    // column names, atomic with the data
-    val assign = indexAssignUdfFor(threshold, centroids)
+    // assign under the index's persisted kernel (never the session
+    // conf), and grouped sets append into their group directories under
+    // the modulus the build wrote — each parsed from column names,
+    // atomic with the data
+    val assign = routerUdf(loadRouter(spark, catalog, db, name))
     val standing = catalog.scanSet(db, s"${name}_vectors")
     catalog.appendToPartitionedSet(db, s"${name}_vectors",
       withCellGroup(standing, vectorsWithNorm(newEmb, idCol, vecCol)
@@ -1051,8 +1030,9 @@ object SimilaritySearch {
       val centroids = indexTrainCentroids(spark, vecs, nCentroids, iters,
         "neighbor_id", "n_vec",
         catalog.meta(db, s"${name}_vectors").map(_.rows).getOrElse(0L))
-      Seq(writeCellVectors(spark, catalog, db, _, vecs, centroids),
-        writeCentroids(spark, catalog, db, _, centroids, routeMarker = true))
+      val (router, markers) = freshRouter(spark, centroids)
+      Seq(writeCellVectors(spark, catalog, db, _, vecs, router),
+        writeCentroids(spark, catalog, db, _, centroids, markers))
     }
 
   /** Streaming form of [[appendToIvfIndex]]: every micro-batch of
@@ -1097,12 +1077,8 @@ object SimilaritySearch {
     * cosine whenever magnitudes vary (measured: shortlist recall drops
     * from ~0.9 to ~0.2 on the fixture).
     */
-  private def unitNormalize(v: Seq[Float]): Array[Double] = {
-    val arr = new Array[Double](v.length)
-    var i = 0
-    while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-    unitNormalized(arr)
-  }
+  private def unitNormalize(v: Seq[Float]): Array[Double] =
+    unitNormalized(toDoubles(v))
 
   /** Same kernel over an already-converted double vector (the shared
     * training sample); `v` is not mutated. Sequential Σv² in index
@@ -1137,23 +1113,9 @@ object SimilaritySearch {
     val dsub = dim / m
     Array.tabulate(m) { j =>
       val lo = j * dsub
-      val slices = sample.map(v => java.util.Arrays.copyOfRange(v, lo, lo + dsub))
-      var centroids = slices.take(kSub).map(_.clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(centroids.length)(new Array[Double](dsub))
-        val counts = new Array[Long](centroids.length)
-        slices.foreach { v =>
-          val c = nearest(centroids, v)
-          counts(c) += 1
-          var i = 0
-          while (i < dsub) { sums(c)(i) += v(i); i += 1 }
-        }
-        centroids = centroids.indices.map { c =>
-          if (counts(c) == 0) centroids(c)
-          else sums(c).map(_ / counts(c))
-        }.toArray
-      }
-      centroids
+      trainCentroidsFromSample(
+        sample.map(v => java.util.Arrays.copyOfRange(v, lo, lo + dsub)),
+        kSub, iters)
     }
   }
 
@@ -1252,15 +1214,8 @@ object SimilaritySearch {
       idCol: String, vecCol: String): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       l2Norm(col(vecCol)).as("q_nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(vectors, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    topKByCosine(short.join(vectors, Seq("neighbor_id"))
+      .join(broadcast(qv), Seq("query_id")), k)
   }
 
   /** (neighbor_id, n_vec, n_nrm) projection for [[rerankExact]]. */
@@ -1382,8 +1337,7 @@ object SimilaritySearch {
     val sample = sampleVectors(emb, idCol, vecCol, 10000)
     val centroids = trainCentroidsFromSample(sample, nCentroids, iters = 3)
     val codebooks = trainPqCodebooksFromSample(sample, m, kSub, iters)
-    writeCentroids(spark, catalog, db, s"${name}_centroids", centroids,
-      routeMarker = false)
+    writeCentroids(spark, catalog, db, s"${name}_centroids", centroids, Nil)
     writeCodebooks(spark, catalog, db, s"${name}_codebooks", codebooks)
     catalog.createPartitionedSet(db, s"${name}_codes",
       codeRows(emb, idCol, vecCol, codebooks, Some(centroids)), "bucket")
@@ -1509,7 +1463,7 @@ object SimilaritySearch {
         catalog.createPartitionedSet(db, _,
           codeRows(vecs, "neighbor_id", "n_vec", codebooks, Some(centroids)),
           "bucket"),
-        writeCentroids(spark, catalog, db, _, centroids, routeMarker = false),
+        writeCentroids(spark, catalog, db, _, centroids, Nil),
         writeCodebooks(spark, catalog, db, _, codebooks))
     }
 
@@ -1616,18 +1570,15 @@ object SimilaritySearch {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2)).toArray
 
-  /** Bucket-ordered coarse-centroid collect — the model load shared by
-    * the append and search paths (the build-time routing threshold is
-    * NOT read here: the search probe is the flat [[probeUdf]] over an
-    * ANN-scale codebook; persisted-threshold derivation belongs to the
-    * assignment paths via [[loadCentroidsWithThreshold]]).
+  /** The coarse centroids of the search probes and the IVF-PQ append
+    * (no kernel markers read: the search probe is the flat
+    * [[probeUdf]], and IVF-PQ assigns flat; the IVF and semantic
+    * assignment paths load through [[loadRouter]]).
     */
   private def loadIvfCentroids(
       catalog: graft.storage.SetCatalog, db: String,
       name: String): Array[Array[Double]] =
-    catalog.scanSet(db, s"${name}_centroids")
-      .orderBy(col("bucket")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    collectCentroids(catalog.scanSet(db, s"${name}_centroids"))
 
   /** Incrementally extend a persisted PQ index: encode the NEW vectors
     * under the standing codebooks and append codes + vectors — no
@@ -1733,19 +1684,12 @@ object SimilaritySearch {
         explode(probe(col(vecCol))).as("bucket"))
         .withColumn("bucket", col("bucket").cast(bucketType)))
       .localCheckpoint(eager = true)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
     // STATIC cell pruning (see pruneToTouchedCells): deterministic
     // listing-level pruning for any query-frame shape — DPP declines on
     // local/RDD-backed query frames and is redundant after this
-    pruneToTouchedCells(vectors, probes).join(broadcast(probes),
-        cellJoinKeys(vectors))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    topKByCosine(pruneToTouchedCells(vectors, probes)
+      .join(broadcast(probes), cellJoinKeys(vectors))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   // --------------------------------------------------------------------

@@ -513,11 +513,12 @@ object PipelineQueries {
   /** SemDeDup with the two-level ROUTED assignment forced on at
     * oracle-reachable scale: k = 8 fine centroids, 3 coarse cells, 2
     * coarse Lloyd iterations ([[Dedup.semanticPairs]] `routeCells = 3`).
-    * Past k = [[Dedup.routeThreshold]] (2048) this routing is what the
-    * default path runs — it is the mechanism that removed the old
-    * 10k-codebook cap's O(n·k·d) assignment term — but no DuckDB-sized
-    * corpus can trigger it automatically (k = 2048 needs 256k vectors),
-    * so this query pins the routed code path against a full SQL mirror:
+    * The default path runs this router for 2048 < k ≤ 16384 (regimes on
+    * [[graft.operators.SimilaritySearch.routerFor]]) — it is the
+    * mechanism that removed the old 10k-codebook cap's O(n·k·d)
+    * assignment term — but no DuckDB-sized corpus can trigger it
+    * automatically (k = 2048 needs 256k vectors), so this query pins the
+    * two-level kernel against a full SQL mirror:
     * coarse quantizer trained over the fine centroids themselves, rows
     * routed to their nearest non-empty cell, argmin within the cell
     * only, then the same within-cluster cosine verify.

@@ -378,6 +378,78 @@ class IvfIndexSpec extends GraftSpecBase {
     SetCatalog.deleteTree(java.nio.file.Paths.get(root))
   }
 
+  test("an index above the tree threshold written without a kernel marker keeps its two-level kernel") {
+    // ADVICE r21 #1: indexes built with k > 16384 before the tree kernel
+    // existed carry route_threshold_2048 and no kernel marker; their
+    // standing vectors sit in two-level cells, so arrivals and probes
+    // must resolve to the two-level kernel too, or identity pairs are
+    // lost without an error
+    import spark.implicits._
+    val k = SimilaritySearch.treeRouteThreshold + 1
+    val rnd = new scala.util.Random(7)
+    val cents = Array.fill(k)(Array.fill(4)(rnd.nextDouble()))
+    val twoLevel =
+      SimilaritySearch.twoLevelRouter(cents, SimilaritySearch.sqrtCells(k), 2)
+    val tree = SimilaritySearch.treeRouter(cents, 2)
+    val vecs = Seq.tabulate(200)(i => (i.toLong, Seq.fill(4)(rnd.nextFloat())))
+    def cellOf(v: Seq[Float]): Long = twoLevel.assign(v.map(_.toDouble).toArray)
+    val copies = vecs.take(50)
+    // precondition: the kernels disagree on some copied vector, so a
+    // tree-resolved append or probe would miss its cell
+    assert(copies.exists { case (_, v) =>
+      cellOf(v) != tree.assign(v.map(_.toDouble).toArray) })
+    val root = Files.createTempDirectory("graft-legacy-kernel").toString
+    val c = new SetCatalog(spark, root)
+    // the legacy layout by hand: marked threshold, no kernel marker,
+    // grouped cell directories (k > 1024)
+    c.createSet("idx", "leg_centroids",
+      cents.zipWithIndex.map { case (v, b) => (b.toLong, v.toSeq) }.toSeq
+        .toDF("bucket", "centroid")
+        .withColumn("route_threshold_2048", lit(true)),
+      policy = "none")
+    c.createPartitionedSet("idx", "leg_vectors",
+      vecs.map { case (id, v) => (id, v, cellOf(v)) }
+        .toDF("neighbor_id", "n_vec", "bucket")
+        .select(col("neighbor_id"), col("n_vec"),
+          graft.functions.TextFunctions.l2Norm(col("n_vec")).as("n_nrm"),
+          col("bucket"), pmod(col("bucket"), lit(1024L)).as("cell_group_1024")),
+      "cell_group_1024")
+    SimilaritySearch.appendToIvfIndex(spark, c, "idx", "leg",
+      copies.map { case (id, v) => (id + 2000L, v) }.toDF("vec_id", "embedding"))
+    val appended = c.scanSet("idx", "leg_vectors")
+      .filter(col("neighbor_id") >= 2000L)
+      .select(col("neighbor_id"), col("bucket")).collect()
+      .map(r => (r.getLong(0) - 2000L, r.getAs[Number](1).longValue)).toMap
+    assert(appended == copies.map { case (id, v) => (id, cellOf(v)) }.toMap,
+      "appended vectors must land in their two-level cells")
+    val got = graft.operators.Dedup.semanticProbeFn(
+        c, "idx", "leg", "vec_id", "embedding", 0.999)(
+        copies.map { case (id, v) => (id + 1000L, v) }.toDF("vec_id", "embedding"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(copies.forall { case (i, _) =>
+        got.contains((i, i + 1000L)) && got.contains((i + 2000L, i + 1000L)) },
+      s"legacy-kernel probe lost built or appended identity pairs: $got")
+    SetCatalog.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  test("a fresh codebook above the tree threshold resolves to the tree and records route_kernel_tree") {
+    import SimilaritySearch.{routerFor, routeMarkers, Flat, Tree, TwoLevel}
+    val t = graft.operators.Dedup.routeThreshold
+    val k = SimilaritySearch.treeRouteThreshold + 1
+    val cents = Array.tabulate(k)(i => Array((i % 128).toDouble, (i / 128).toDouble))
+    val fresh = routerFor(t, cents, treeAllowed = true)
+    assert(fresh.isInstanceOf[Tree])
+    assert(routeMarkers(t, fresh) == Seq(s"route_threshold_$t", "route_kernel_tree"))
+    // a persisted codebook of that size without the marker: two-level
+    assert(routerFor(t, cents, treeAllowed = false).isInstanceOf[TwoLevel])
+    // at k <= 16384 the markers, and so the persisted schema, are the
+    // pre-tree ones
+    val mid = routerFor(t, cents.take(k - 1), treeAllowed = true)
+    assert(mid.isInstanceOf[TwoLevel])
+    assert(routeMarkers(t, mid) == Seq(s"route_threshold_$t"))
+    assert(routerFor(t, cents.take(t), treeAllowed = true).isInstanceOf[Flat])
+  }
+
   test("appendToSemanticIndex rebuildIfDrifted triggers the re-sized rebuild") {
     val emb = Tables.embeddings(spark, sfDir)
     val root = Files.createTempDirectory("graft-sem-drift").toString
